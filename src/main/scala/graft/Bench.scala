@@ -32,11 +32,9 @@ object Bench {
         }
       // a failed query must not masquerade as a fast one
       val dt: Double = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // The noop write consumed the result fully, so the plain
-      // withGlobalRanks/withGlobalLag snapshots pinned by this run are
-      // safe to drop — without this, the 4 shots of q_global_rank pin 4
-      // cached copies of the keyed table in one JVM. Outside the timed
-      // span.
+      // The noop write consumed the result fully, so the PlanCache pins
+      // made by this run are safe to drop — without this, repeated shots
+      // pin one cached copy each. Outside the timed span.
       graft.operators.GlobalOps.releaseSnapshots()
       dt
     }

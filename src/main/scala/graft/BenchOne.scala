@@ -47,9 +47,7 @@ object BenchOne {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       // same lifecycle as Bench: the noop write fully consumed the
-      // result, so per-shot rank/shift snapshots are safe to drop —
-      // without this, repeated shots of a global-window query pin one
-      // cached copy of the keyed table each
+      // result, so per-shot PlanCache pins are safe to drop
       graft.operators.GlobalOps.releaseSnapshots()
       dt
     }

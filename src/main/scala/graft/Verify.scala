@@ -30,8 +30,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally
-        // the write consumed the result; drop any snapshot pinned by a
-        // plain withGlobalRanks so one dump doesn't cache the keyed table
+        // the write consumed the result; drop its PlanCache pins so one
+        // dump doesn't accumulate cached frames
         graft.operators.GlobalOps.releaseSnapshots()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -6,13 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Whole-table cumulative SUM without the single-partition window a
   * naive `SUM(v) OVER (ORDER BY …)` plans — the third member of the
-  * two-pass global family ([[GlobalRank]], [[GlobalShift]]): range-
-  * bucket on the order keys ([[RangeBuckets]] — deterministic literal
-  * split points for numeric/timestamp/string first keys, sampled range
-  * + persisted snapshot otherwise), cum-sum locally per partition with
-  * an ordinary parallel window, add broadcast per-partition prefix
+  * two-pass global family ([[GlobalRank]], [[GlobalShift]]): bucket on
+  * the order keys ([[RangeBuckets.stamp]]), cum-sum locally per bucket
+  * with an ordinary parallel window, add broadcast per-bucket prefix
   * offsets as a scan-local map lookup. Pass 1 is one tiny row per
-  * partition (bounded by the shuffle fan-out, never by data).
+  * bucket (bounded by the shuffle fan-out, never by data).
   *
   * LONG values only, by contract: integer addition is associative, so
   * the partial-sums-plus-offsets decomposition is exactly the global
@@ -30,39 +28,20 @@ import org.apache.spark.sql.functions._
   * in-plan, mirrored by the oracle); null ORDER keys follow the family
   * contract (NULLS FIRST; cross-engine parity for non-null keys).
   *
-  * Snapshot lifecycle, misalignment guard, and release discipline are
-  * the [[GlobalRank]] ones verbatim: nothing persists on the
-  * split-point tiers; the legacy sampled tier pins one MEMORY_AND_DISK
-  * snapshot, registry-tracked for the harness-level
-  * [[releaseSnapshots]] wipe, and a pass-2 pid missing from pass 1
-  * fails loudly instead of silently corrupting sums.
+  * Nothing is cached; a pass-2 bucket missing from pass 1 (input not
+  * deterministic upstream) fails loudly instead of silently corrupting
+  * sums, as in [[GlobalRank]].
   *
   * Overflow: SUM(long) wraps silently past 2^63 with ANSI off — at a
   * total weight that large, rescale the weights first (the systematic
   * resampler `require`s headroom explicitly). */
-object GlobalCumSum extends SnapshotRegistry {
+object GlobalCumSum {
 
   /** Append the global cumulative sum of `value` over `order` as
-    * `name`. Same lifecycle caveat as [[GlobalRank.withGlobalRanks]]:
-    * the legacy tier's snapshot stays pinned until [[releaseSnapshots]]
-    * (harness) — library code should use the releasable variant. */
+    * `name`. */
   def withGlobalCumSum(df: DataFrame, value: Column, order: Seq[Column],
-                       name: String = "cum"): DataFrame = {
-    val (out, snap, _) = build(df, value, order, name)
-    register(snap)
-    out
-  }
-
-  /** Per-call-release twin: (frame, idempotent release handle — true
-    * iff this invocation released a real snapshot). Never execute the
-    * returned plan after releasing (range boundaries are job-specific;
-    * see [[GlobalRank]]'s alignment scaladoc). */
-  def withGlobalCumSumReleasable(df: DataFrame, value: Column,
-                                 order: Seq[Column], name: String = "cum")
-      : (DataFrame, () => Boolean) = {
-    val (out, snap, _) = build(df, value, order, name)
-    (out, mkRelease(snap))
-  }
+                       name: String = "cum"): DataFrame =
+    withGlobalCumSumStats(df, value, order, name)._1
 
   /** Whole-table facts pass 1 computes for free while deriving the
     * offsets — row count, total value sum, min value. Exposed so
@@ -71,18 +50,10 @@ object GlobalCumSum extends SnapshotRegistry {
   private[operators] final case class Stats(rows: Long, sum: Long, min: Long)
 
   /** [[withGlobalCumSum]] plus the pass-1 [[Stats]] — saves the caller
-    * one full input scan. Same registry lifecycle as the plain variant
-    * (a legacy-tier snapshot is tracked for [[releaseSnapshots]]). */
+    * one full input scan. */
   private[operators] def withGlobalCumSumStats(
       df: DataFrame, value: Column, order: Seq[Column],
       name: String = "cum"): (DataFrame, Stats) = {
-    val (out, snap, stats) = build(df, value, order, name)
-    register(snap)
-    (out, stats)
-  }
-
-  private def build(df: DataFrame, value: Column, order: Seq[Column],
-                    name: String): (DataFrame, Option[DataFrame], Stats) = {
     require(order.nonEmpty, "withGlobalCumSum: need at least one order column")
     val reserved = Seq("__pid", "__cv") ++ order.indices.map(i => s"__ok$i")
     val clash = df.columns.toSet.intersect(reserved.toSet)
@@ -96,40 +67,28 @@ object GlobalCumSum extends SnapshotRegistry {
       df.withColumn("__cv", coalesce(value.cast("long"), lit(0L)))) {
       case (d, (c, n)) => d.withColumn(n, c)
     }
-    val okCols = okNames.map(col)
     val numParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val firstType = df.select(order.head).schema.head.dataType
-    val (parted, snapshot) = RangeBuckets.bucketOrSnapshot(
-      keyed, firstType, okNames.head, okCols, numParts)
+    val parted = RangeBuckets.stamp(keyed, okNames, numParts)
 
-    // pass 1: per-partition value sums (one row per partition), plus the
+    // pass 1: per-bucket value sums (one row per bucket), plus the
     // whole-table row/sum/min facts the same rows carry for free
     val stats = parted.groupBy("__pid")
       .agg(sum(col("__cv")).as("__s"), count(lit(1)).as("__n"),
         min(col("__cv")).as("__m"))
       .collect().map(r => (r.getAs[Int]("__pid"), r.getAs[Long]("__s"),
         r.getAs[Long]("__n"), r.getAs[Long]("__m")))
-      .sortBy(_._1)
-    if (stats.isEmpty) {
-      // empty input: typedLit of an empty map has no value type to infer
-      snapshot.foreach(_.unpersist(blocking = false))
+    // empty input: typedLit of an empty map has no value type to infer
+    if (stats.isEmpty)
       return (df.withColumn(name, lit(null).cast("long")).filter(lit(false)),
-        None, Stats(0L, 0L, 0L))
-    }
+        Stats(0L, 0L, 0L))
     val facts = Stats(stats.map(_._3).sum, stats.map(_._2).sum,
       stats.map(_._4).min)
-    val offsets = stats.map(_._1).zip(stats.scanLeft(0L)(_ + _._2).init).toMap
+    val off = RangeBuckets.prefixOffset("GlobalCumSum", stats.map(s => s._1 -> s._2))
 
-    // pass 2: parallel within-partition window + broadcast offset; a pid
-    // with no pass-1 row means cross-job misalignment — fail loudly
-    val raw = element_at(typedLit(offsets), col("__pid"))
-    val off = when(raw.isNull, raise_error(concat(
-      lit("GlobalCumSum: range-partition misalignment between sum and " +
-        "cumsum passes, pid="), col("__pid").cast("string")))).otherwise(raw)
-    val w = Window.partitionBy("__pid").orderBy(okCols: _*)
+    // pass 2: parallel within-bucket window + broadcast offset
+    val w = Window.partitionBy("__pid").orderBy(okNames.map(col): _*)
     (parted
       .withColumn(name, (off + sum(col("__cv")).over(w)).cast("long"))
-      .drop(okNames :+ "__pid" :+ "__cv": _*), snapshot, facts)
+      .drop(okNames :+ "__pid" :+ "__cv": _*), facts)
   }
-
 }

@@ -6,19 +6,20 @@ import org.apache.spark.sql.functions._
 
 /** Whole-table (global) rank family WITHOUT the single-partition window a
   * naive `rank() OVER (ORDER BY …)` plans — the classic two-pass pattern:
-  * range-partition on the order keys, rank locally per partition, then add
-  * broadcast per-partition offsets. Beyond-reference extension (the
-  * reference ranks by sorting the whole frame in one process,
-  * `dataframe.nim:2298-2341`-adjacent; a distributed engine must not).
+  * bucket on the order keys ([[RangeBuckets.stamp]]), rank locally per
+  * bucket, then add broadcast per-bucket offsets. Beyond-reference
+  * extension (the reference ranks by sorting the whole frame in one
+  * process, `dataframe.nim:2298-2341`-adjacent; a distributed engine must
+  * not).
   *
-  * Pass 1 aggregates per-range-partition row/distinct-key counts (one
-  * tiny row per partition, collected to the driver and prefix-summed —
-  * bounded by the shuffle-partition count, never by data). Pass 2 ranks
-  * inside each range partition with an ordinary parallel window and adds
-  * the offsets as a scan-local map lookup. Equal keys land in the same
-  * range partition by construction, so ties never straddle partitions and
-  *   global rank       = partition row offset + local rank
-  *   global dense_rank = partition key offset + local dense_rank
+  * Pass 1 aggregates per-bucket row/distinct-key counts (one tiny row per
+  * bucket, collected to the driver and prefix-summed — bounded by the
+  * shuffle-partition count, never by data). Pass 2 ranks inside each
+  * bucket with an ordinary parallel window and adds the offsets as a
+  * scan-local map lookup. Equal keys share a bucket by construction, so
+  * ties never straddle buckets and
+  *   global rank       = bucket row offset + local rank
+  *   global dense_rank = bucket key offset + local dense_rank
   *   percent_rank      = (rank − 1) / (N − 1)
   *   cume_dist         = (rank + tie_size − 1) / N
   * — every derivation a single division of exact integers, so the doubles
@@ -27,33 +28,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: max task size is ~N / shuffle-partitions rows (plus tie
   * skew), asserted in GlobalRankSuite — parallelism grows with the
   * cluster instead of being capped at 1 (or at the cardinality of some
-  * low-card partition key). The order keys are exchanged twice (the
-  * stats pass and the rank pass are separate jobs); both exchanges are
-  * full-width, and at 100 TB the alternative — one partition sorting
-  * everything — is not an alternative.
+  * low-card partition key).
   *
-  * Cross-job alignment: pass 1's offsets are only valid if pass 2 lands
-  * every row in the same range partition. This does NOT come for free —
-  * Spark's range boundaries are reservoir-sampled with a seed that
-  * involves the materialization-specific RDD id, so two separate jobs
-  * planning the same `repartitionByRange` derive DIFFERENT boundaries
-  * whenever ties/sampling make the quantile cut ambiguous (empirically:
-  * two count-by-pid jobs over sf0.01 lineitem disagreed on which side
-  * of a cut the l_quantity=26 group fell). The operator therefore
-  * `persist()`s the range-partitioned, pid-stamped snapshot: pass 1's
-  * stats collect materializes the cache, pass 2 ranks the SAME frozen
-  * rows, and even a cache-evicted partition recomputes through the one
-  * shared partitioner instance (boundaries are computed once per
-  * shuffle dependency, not per job). The cache is the price of a
-  * consistent cross-job snapshot — MEMORY_AND_DISK, one materialization
-  * of the keyed table, released by [[withGlobalRanksManaged]] or
-  * session end.
-  * The exchange also uses an EXPLICIT partition count (exempt from AQE
-  * coalescing, which is likewise per-job). Defense-in-depth: a pid in
-  * pass 2 with no pass-1 stats row — never a legitimate state — FAILS
-  * LOUDLY via `raise_error` instead of silently nulling ranks. AQE with
-  * forced coalescing and a parquet-backed source (the case that exposed
-  * the boundary instability) are pinned in GlobalRankSuite.
+  * `__pid` is a pure projection of the row, so both passes agree on
+  * every row's bucket as long as the input itself is deterministic; a
+  * pass-2 bucket with no pass-1 stats row fails loudly via `raise_error`
+  * instead of silently nulling ranks.
   *
   * Order-key nulls: keys are ranked with Spark's default ASC NULLS
   * FIRST; DuckDB (and the SQL standard default for ASC) is NULLS LAST,
@@ -62,45 +42,15 @@ import org.apache.spark.sql.functions._
   * nullable keys should `coalesce` them to a sentinel (or filter) first;
   * the rank arithmetic itself stays correct either way, only the
   * cross-engine tie order of the null group differs. */
-object GlobalRank extends SnapshotRegistry {
+object GlobalRank {
 
   /** Append global `rnk`/`drnk`/`prnk`/`cdist` over `order`. Tie-stable:
     * a non-unique order still yields deterministic values (ntile is
-    * excluded here for exactly that reason — see DataTable.withNtile).
-    *
-    * The returned plan reads through a MEMORY_AND_DISK snapshot that must
-    * stay cached while the plan can still be executed (range boundaries
-    * are job-specific — see the alignment scaladoc on [[build]]), so this
-    * variant cannot self-release. The snapshot is tracked; call
-    * [[releaseSnapshots]] once the consuming action is done, or use
-    * [[withGlobalRanksManaged]] for scoped use. Without either, each call
-    * pins one keyed-table copy until session end. */
+    * excluded here for exactly that reason — see DataTable.withNtile). */
   def withGlobalRanks(df: DataFrame, order: Seq[Column],
                       rankName: String = "rnk", denseName: String = "drnk",
-                      pctName: String = "prnk", cumeName: String = "cdist"): DataFrame = {
-    val (ranked, snap, _) = build(df, order, rankName, denseName, pctName, cumeName)
-    // register only when something is actually pinned: the empty-input
-    // short-circuit returns no snapshot, and a dead handle would make
-    // liveSnapshotCount over-report against getPersistentRDDs
-    register(snap)
-    ranked
-  }
-
-  /** Per-call-release twin of [[withGlobalRanks]]: returns the ranked
-    * frame plus an idempotent handle that unpersists ONLY this call's
-    * snapshot (true iff this invocation actually released it). Library
-    * code that can't use the [[withGlobalRanksManaged]] loan scope should
-    * prefer this over the process-wide [[releaseSnapshots]] wipe, which
-    * is only safe for a harness that owns every in-flight plain call.
-    * The same post-release rule applies: never execute the ranked plan
-    * again after releasing (see the alignment scaladoc on [[build]]). */
-  def withGlobalRanksReleasable(df: DataFrame, order: Seq[Column],
-                                rankName: String = "rnk", denseName: String = "drnk",
-                                pctName: String = "prnk", cumeName: String = "cdist")
-      : (DataFrame, () => Boolean) = {
-    val (ranked, snap, _) = build(df, order, rankName, denseName, pctName, cumeName)
-    (ranked, mkRelease(snap))
-  }
+                      pctName: String = "prnk", cumeName: String = "cdist"): DataFrame =
+    build(df, order, rankName, denseName, pctName, cumeName)._1
 
   /** Global `NTILE(buckets)` over a UNIQUE total order, two-pass — the
     * whole-table quantile bucketing a naive
@@ -113,10 +63,8 @@ object GlobalRank extends SnapshotRegistry {
     * take q+1 rows. All `IntegralDivide` arithmetic — exact past 2^53,
     * bit-replayable by a DuckDB `NTILE(b)` over the same order.
     *
-    * Same snapshot lifecycle as [[withGlobalRanks]] (registry-tracked;
-    * nothing persists on the split-point tier). Order-key nulls follow
-    * the family contract (NULLS FIRST — oracle parity for non-null keys
-    * only). */
+    * Order-key nulls follow the family contract (NULLS FIRST — oracle
+    * parity for non-null keys only). */
   def withGlobalNtile(df: DataFrame, buckets: Int, uniqueOrder: Seq[Column],
                       name: String = "bucket"): DataFrame = {
     require(buckets >= 1, s"withGlobalNtile: buckets=$buckets must be >= 1")
@@ -124,9 +72,8 @@ object GlobalRank extends SnapshotRegistry {
     import org.apache.spark.sql.graftshim.Shim
     val rn = "__nt_rn"
     val helpers = Seq("__nt_d", "__nt_p", "__nt_c")
-    val (ranked, snap, total) = build(df, uniqueOrder, rn, helpers(0),
+    val (ranked, total) = build(df, uniqueOrder, rn, helpers(0),
       helpers(1), helpers(2), requireUnique = true)
-    register(snap)
     val q = total / buckets
     val r = total % buckets
     def idiv(a: Column, d: Long): Column = Shim.toColumn(new IntegralDivide(
@@ -143,52 +90,24 @@ object GlobalRank extends SnapshotRegistry {
       .drop(rn +: helpers: _*)
   }
 
-  // snapshot registry (mkRelease/register/liveSnapshotCount/
-  // releaseSnapshots) inherited from SnapshotRegistry; a re-execution of
-  // a plain-variant plan after release re-derives job-specific range
-  // boundaries and corrupts ranks SILENTLY — library paths must use
-  // [[withGlobalRanksManaged]] or [[withGlobalRanksReleasable]]
-
-  /** Core: returns (ranked plan, the persisted snapshot it reads through
-    * — None on the deterministic split-point tier and on the empty-input
-    * short-circuit). */
+  /** Core: returns (ranked plan, total row count). */
   private def build(df: DataFrame, order: Seq[Column],
                     rankName: String, denseName: String,
                     pctName: String, cumeName: String,
-                    requireUnique: Boolean = false)
-      : (DataFrame, Option[DataFrame], Long) = {
+                    requireUnique: Boolean = false): (DataFrame, Long) = {
     require(order.nonEmpty, "withGlobalRanks: need at least one order column")
     val okNames = order.indices.map(i => s"__ok$i")
     val keyed = order.zip(okNames).foldLeft(df) { case (d, (c, n)) => d.withColumn(n, c) }
     val okCols = okNames.map(col)
-    // EXPLICIT partition count, not repartitionByRange(cols…): with the
-    // count left implicit, AQE is free to coalesce the range exchange,
-    // and it decides PER JOB — at sf0.1/local[32] the stats job and the
-    // rank job really did coalesce differently (caught by the
-    // misalignment guard below; before the guard, ranks went silently
-    // null). A user-specified count is exempt from AQE coalescing, so
-    // both jobs run the identical exchange.
     val numParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // bucketing tier (see RangeBuckets): a long/double-orderable first
-    // key gets deterministic literal split-point buckets — __pid is a
-    // pure projection, both passes align by construction, nothing
-    // persists (equal keys can never straddle a bucket boundary, the tie
-    // invariant the rank arithmetic builds on). Otherwise the legacy
-    // tier: persist BEFORE stamping anything downstream — range
-    // boundaries are job-specific (see scaladoc), so the pid assignment
-    // must be frozen once and shared by both passes; pass 1's collect
-    // materializes it.
-    val firstType = df.select(order.head).schema.head.dataType
-    val (parted, snapshot) = RangeBuckets.bucketOrSnapshot(
-      keyed, firstType, okNames.head, okCols, numParts)
+    val parted = RangeBuckets.stamp(keyed, okNames, numParts)
 
-    // pass 1: per-partition row + distinct-key counts (one row/partition)
+    // pass 1: per-bucket row + distinct-key counts (one row/bucket)
     val stats = parted.groupBy("__pid").agg(
       count(lit(1)).as("__rows"),
       count_distinct(struct(okCols: _*)).as("__keys"))
       .collect().map(r => (r.getAs[Int]("__pid"),
         r.getAs[Long]("__rows"), r.getAs[Long]("__keys")))
-      .sortBy(_._1)
     val total = stats.map(_._2).sum
     // ntile contract: with a NON-unique order, equal keys share a rank
     // and the bucket arithmetic silently diverges from SQL NTILE (which
@@ -202,32 +121,21 @@ object GlobalRank extends SnapshotRegistry {
           "position-dependent; add a tiebreaker key")
     }
     // empty input: no stats rows → typedLit of an empty map has no value
-    // type to infer; short-circuit with the same (empty) schema (and
-    // release the snapshot — nothing references it)
-    if (total == 0L) {
-      snapshot.foreach(_.unpersist(blocking = false))
+    // type to infer; short-circuit with the same (empty) schema
+    if (total == 0L)
       return (df
         .withColumn(rankName, lit(null).cast("long"))
         .withColumn(denseName, lit(null).cast("long"))
         .withColumn(pctName, lit(null).cast("double"))
         .withColumn(cumeName, lit(null).cast("double"))
-        .filter(lit(false)), None, 0L)
-    }
-    val rowOff = stats.map(_._1).zip(stats.scanLeft(0L)(_ + _._2).init).toMap
-    val keyOff = stats.map(_._1).zip(stats.scanLeft(0L)(_ + _._3).init).toMap
+        .filter(lit(false)), 0L)
+    val rowOff = RangeBuckets.prefixOffset("GlobalRank", stats.map(s => s._1 -> s._2))
+    val keyOff = RangeBuckets.prefixOffset("GlobalRank", stats.map(s => s._1 -> s._3))
 
-    // pass 2: ordinary parallel windows inside each range partition.
-    // A pid with no pass-1 stats row means the two jobs disagreed on
-    // range-partition assignment — corrupt ranks; fail loudly instead.
-    def offset(m: Map[Int, Long]): Column = {
-      val raw = element_at(typedLit(m), col("__pid"))
-      when(raw.isNull, raise_error(concat(
-        lit("GlobalRank: range-partition misalignment between stats and rank passes, pid="),
-        col("__pid").cast("string")))).otherwise(raw)
-    }
+    // pass 2: ordinary parallel windows inside each bucket
     val w = Window.partitionBy("__pid").orderBy(okCols: _*)
-    val rnk = offset(rowOff) + rank().over(w)
-    val drnk = offset(keyOff) + dense_rank().over(w)
+    val rnk = rowOff + rank().over(w)
+    val drnk = keyOff + dense_rank().over(w)
     // SQL defines percent_rank of a 1-row table as 0.0 — avoid 0/0
     val prnk =
       if (total > 1L)
@@ -237,35 +145,16 @@ object GlobalRank extends SnapshotRegistry {
     // exactly count(*) over the default RANGE UNBOUNDED PRECEDING ..
     // CURRENT ROW frame of the SAME (partition, order) spec the ranks
     // use: locally that count is rank + tie_size − 1, so the global
-    // numerator is rowOffset + localCount — the identical exact-integer
-    // sum the previous (rank + tie − 1) form produced. Sharing w keeps
-    // every window expression in ONE Window operator; the old tie count
-    // partitioned by (__pid, okCols…), a DIFFERENT distribution that
-    // forced a second full-width Exchange + Sort into pass 2
-    // (guide §2.4: operations keyed the same way share one exchange).
-    val cume = (offset(rowOff) + count(lit(1)).over(w)).cast("double") /
+    // numerator is rowOffset + localCount. Sharing w keeps every window
+    // expression in ONE Window operator (guide §2.4: operations keyed
+    // the same way share one exchange).
+    val cume = (rowOff + count(lit(1)).over(w)).cast("double") /
       lit(total.toDouble)
     (parted
       .withColumn(rankName, rnk)
       .withColumn(denseName, drnk)
       .withColumn(pctName, prnk)
       .withColumn(cumeName, cume)
-      .drop(okNames :+ "__pid": _*), snapshot, total)
-  }
-
-  /** Loan-pattern twin of [[withGlobalRanks]] that releases the snapshot
-    * cache once `use` returns — for callers that consume the ranked
-    * frame in one scope and don't want the MEMORY_AND_DISK snapshot to
-    * outlive it. (The plain variant leaves the cache alive because the
-    * returned plan reads THROUGH it: unpersisting early would let a
-    * later action re-derive range boundaries — job-specific — and
-    * silently corrupt ranks; see the alignment scaladoc above.) */
-  def withGlobalRanksManaged[A](df: DataFrame, order: Seq[Column],
-                                rankName: String = "rnk", denseName: String = "drnk",
-                                pctName: String = "prnk", cumeName: String = "cdist")
-                               (use: DataFrame => A): A = {
-    val (ranked, snapshot, _) = build(df, order, rankName, denseName, pctName, cumeName)
-    try use(ranked)
-    finally snapshot.foreach(_.unpersist(blocking = false))
+      .drop(okNames :+ "__pid": _*), total)
   }
 }

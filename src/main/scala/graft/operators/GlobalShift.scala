@@ -13,87 +13,37 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, StructField, Struct
   * through one task (the documented small-data-only fallback
   * `DataTable.withLag` used to be the only option).
   *
-  * Pass 1 splits the table into range buckets contiguous in the global
-  * order and collects each bucket's BOUNDARY STRIP: the last `n` rows'
-  * shift values (for lag; first `n` for lead) — at most n × buckets
-  * tiny rows, bounded by the shuffle-partition count, never by data.
-  * Pass 2 runs an ordinary parallel per-bucket window shift — exact for
-  * every row beyond the first/last `n` of its bucket, because buckets
-  * are contiguous in the global order — and fills those boundary rows
-  * from the strips via a broadcast (pid, rn) join: the first row of
-  * each bucket takes the previous bucket's tail, which is exactly the
-  * hand-off GlobalShiftSuite pins.
-  *
-  * BUCKETING — two tiers:
-  *   - Orderable-to-long/double first key (integral, float/double,
-  *     timestamp — the overwhelmingly common case): bucket boundaries
-  *     are LITERAL split points (one approxQuantile job over a scan
-  *     pruned to the first key, snapped into the key's own type), and
-  *     the bucket id is a PURE PROJECTION of the row. Both passes then
-  *     compute identical bucket ids by construction — no snapshot, no
-  *     persist, no cross-job sampling to misalign. At 100 TB this is
-  *     the difference between three column-pruned scans and
-  *     materializing a full-width copy of the table in cache. Ties in
-  *     the first key all land in one bucket (contiguity is preserved;
-  *     only balance degrades, and the remaining order keys never decide
-  *     a bucket).
-  *   - Any other first-key type: the legacy path — sampled
-  *     `repartitionByRange` over all order keys through a persisted
-  *     MEMORY_AND_DISK snapshot (boundaries are job-specific, see the
-  *     alignment scaladoc on [[GlobalRank.build]]), with the
-  *     misalignment guard converting a recompute into a loud error.
+  * Pass 1 splits the table into buckets contiguous in the global order
+  * ([[RangeBuckets.stamp]] — `__pid` is a pure projection, so both passes
+  * agree on every row's bucket and nothing is cached) and collects each
+  * bucket's BOUNDARY STRIP: the last `n` rows' shift values (for lag;
+  * first `n` for lead) — at most n × buckets tiny rows, bounded by the
+  * shuffle-partition count, never by data. Pass 2 runs an ordinary
+  * parallel per-bucket window shift — exact for every row beyond the
+  * first/last `n` of its bucket — and fills those boundary rows from the
+  * strips via a broadcast (pid, rn) join: the first row of each bucket
+  * takes the previous bucket's tail, which is exactly the hand-off
+  * GlobalShiftSuite pins.
   *
   * CONTRACT: `order` must be a UNIQUE total order (the
   * [[graft.api.DataTable.withNtile]] rule): a shift is positional, so
-  * under ties both the result and the cross-engine replay would be
-  * nondeterministic. Plain ascending value columns only (the
-  * [[GlobalRank]] key contract); non-null keys for cross-engine
-  * bit-exactness (Spark ASC NULLS FIRST vs DuckDB NULLS LAST).
-  *
-  * Snapshot lifecycle (legacy tier only): the returned plan reads
-  * through a MEMORY_AND_DISK snapshot that must stay cached while the
-  * plan can still be executed. Plain calls register in a process-wide
-  * registry released by the harness ([[releaseSnapshots]]); library
-  * callers use the releasable variant. On the split-point tier both
-  * release hooks are no-ops (there is nothing to unpersist). */
-object GlobalShift extends SnapshotRegistry {
+  * under ties the result would be nondeterministic. Pass 2 enforces it:
+  * a row whose order tuple equals its predecessor's fails loudly.
+  * Plain ascending value columns only (the [[GlobalRank]] key contract);
+  * non-null keys for cross-engine bit-exactness (Spark ASC NULLS FIRST
+  * vs DuckDB NULLS LAST). */
+object GlobalShift {
 
   /** Append global `lag(c, n)` over `order` as column `name` (`default`
-    * when fewer than `n` rows precede globally). Registers its snapshot
-    * in the harness registry — see [[releaseSnapshots]]. */
+    * when fewer than `n` rows precede globally). */
   def withGlobalLag(df: DataFrame, name: String, c: Column, n: Int,
                     order: Seq[Column], default: Any = null): DataFrame =
-    registered(build(df, Seq(Shift(name, c, n, isLead = false, default)), order))
+    build(df, Seq(Shift(name, c, n, isLead = false, default)), order)
 
   /** Append global `lead(c, n)` over `order` as column `name`. */
   def withGlobalLead(df: DataFrame, name: String, c: Column, n: Int,
                      order: Seq[Column], default: Any = null): DataFrame =
-    registered(build(df, Seq(Shift(name, c, n, isLead = true, default)), order))
-
-  /** Per-call-release twin (the [[GlobalRank.withGlobalRanksReleasable]]
-    * contract: never execute the returned plan after releasing). */
-  def withGlobalLagReleasable(df: DataFrame, name: String, c: Column, n: Int,
-                              order: Seq[Column], default: Any = null)
-      : (DataFrame, () => Boolean) = {
-    val (out, snap) =
-      build(df, Seq(Shift(name, c, n, isLead = false, default)), order)
-    (out, mkRelease(snap))
-  }
-
-  def withGlobalLeadReleasable(df: DataFrame, name: String, c: Column, n: Int,
-                               order: Seq[Column], default: Any = null)
-      : (DataFrame, () => Boolean) = {
-    val (out, snap) =
-      build(df, Seq(Shift(name, c, n, isLead = true, default)), order)
-    (out, mkRelease(snap))
-  }
-
-  // snapshot registry inherited from SnapshotRegistry (harness release
-  // rules in the trait scaladoc)
-  private def registered(r: (DataFrame, Option[DataFrame])): DataFrame = {
-    register(r._2)
-    r._1
-  }
+    build(df, Seq(Shift(name, c, n, isLead = true, default)), order)
 
   /** TEST SEAM (GlobalShiftSuite): when set, [[build]] records the pass-1
     * strip job's physical plan string — the strip executes eagerly inside
@@ -129,27 +79,16 @@ object GlobalShift extends SnapshotRegistry {
     * batch. */
   def withGlobalShifts(df: DataFrame, shifts: Seq[Shift],
                        order: Seq[Column]): DataFrame =
-    registered(build(df, shifts, order))
+    build(df, shifts, order)
 
-  def withGlobalShiftsReleasable(df: DataFrame, shifts: Seq[Shift],
-                                 order: Seq[Column])
-      : (DataFrame, () => Boolean) = {
-    val (out, snap) = build(df, shifts, order)
-    (out, mkRelease(snap))
-  }
-
-  /** Core. Returns (shifted plan, the persisted snapshot it reads
-    * through — None on the deterministic split-point tier, which needs
-    * no snapshot).
-    *
-    * `tamperCountsForTest` is a TEST SEAM (identity in production): it
-    * distorts only the GUARD's view of the pass-1 counts, so the suite
-    * can simulate a pass-2/pass-1 partition mismatch — the snapshot
-    * recompute case — without having to force real block loss. */
+  /** Core. `tamperCountsForTest` is a TEST SEAM (identity in production):
+    * it distorts only the GUARD's view of the pass-1 counts, so the suite
+    * can simulate a pass-2/pass-1 bucket mismatch — what an input that is
+    * not deterministic upstream looks like — without such an input. */
   private[graft] def build(df: DataFrame, shifts: Seq[Shift],
                     order: Seq[Column],
                     tamperCountsForTest: Map[Int, Long] => Map[Int, Long] =
-                      identity): (DataFrame, Option[DataFrame]) = {
+                      identity): DataFrame = {
     require(order.nonEmpty, "GlobalShift: need at least one order column")
     require(shifts.nonEmpty, "GlobalShift: need at least one shift")
     shifts.foreach(sp => require(sp.n >= 1,
@@ -185,9 +124,6 @@ object GlobalShift extends SnapshotRegistry {
     val okCols = okNames.map(col)
     val maxLag = shifts.filter(!_.isLead).map(_.n).maxOption.getOrElse(0)
     val maxLead = shifts.filter(_.isLead).map(_.n).maxOption.getOrElse(0)
-    // explicit partition count — exempt from per-job AQE coalescing,
-    // so the strip job and the shift job run the identical exchange
-    // (the GlobalRank alignment discipline)
     val numParts = df.sparkSession.sessionState.conf.numShufflePartitions
     require((maxLag.toLong + maxLead) * numParts <= MaxBoundaryRows,
       s"GlobalShift: shift distances (lag $maxLag + lead $maxLead) × " +
@@ -196,10 +132,7 @@ object GlobalShift extends SnapshotRegistry {
         "not a boundary hand-off any more (pass 1 would collect and " +
         "re-broadcast O(n × partitions) rows); reformulate as a join on " +
         "global rank, or reduce n")
-    // ---- bucketing tier (see object scaladoc + RangeBuckets) ----
-    val firstType = df.select(order.head).schema.head.dataType
-    val (parted, snapshot) = RangeBuckets.bucketOrSnapshot(
-      keyed, firstType, okNames.head, okCols, numParts)
+    val parted = RangeBuckets.stamp(keyed, okNames, numParts)
 
     // pass 1: ONE job, ONE collect, gathering the boundary strips AND
     // per-partition counts as rows of a shared (pid, kind, j, cnt, sv…)
@@ -231,12 +164,10 @@ object GlobalShift extends SnapshotRegistry {
     //
     // Tier rule: bounded when the estimated scan task count reaches
     // numParts/2 (map sorts then no less parallel than the exchange
-    // tier's reduce sorts, and the saved shuffle only grows with data),
-    // and ALWAYS on the legacy snapshot tier (the cache is already
-    // numParts range partitions — strips sort them in place; the
-    // exchange tier would re-shuffle the whole cache). Env override
-    // SPARK_GRAFT_SHIFT_BOUNDED=1/0 for deployment tuning and plan
-    // audits; the crossover is input-derived, not a local[32] constant.
+    // tier's reduce sorts, and the saved shuffle only grows with data).
+    // Env override SPARK_GRAFT_SHIFT_BOUNDED=1/0 for deployment tuning
+    // and plan audits; the crossover is input-derived, not a local[32]
+    // constant.
     //
     // The counts stay load-bearing either way: (1) they translate "i-th
     // row before the END of a bucket" into the ascending row_number
@@ -251,16 +182,13 @@ object GlobalShift extends SnapshotRegistry {
       case Some("1") => true
       case Some("0") => false
       case _ => forceBoundedStripForTest.getOrElse {
-        if (snapshot.isDefined) true
-        else {
-          val conf = df.sparkSession.sessionState.conf
-          val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
-          val inBytes = narrow.queryExecution.optimizedPlan.stats.sizeInBytes
-          // unknown catalyst stats read as Long.MaxValue-scale — treat as
-          // large (the scale side is the safe default for this operator)
-          if (inBytes <= 0 || inBytes >= BigInt(Long.MaxValue) / 4) true
-          else (inBytes / maxSplit + 1) * 2 >= numParts
-        }
+        val conf = df.sparkSession.sessionState.conf
+        val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
+        val inBytes = narrow.queryExecution.optimizedPlan.stats.sizeInBytes
+        // unknown catalyst stats read as Long.MaxValue-scale — treat as
+        // large (the scale side is the safe default for this operator)
+        if (inBytes <= 0 || inBytes >= BigInt(Long.MaxValue) / 4) true
+        else (inBytes / maxSplit + 1) * 2 >= numParts
       }
     }
     def stripDf(isHead: Boolean, lim: Int): DataFrame = {
@@ -298,12 +226,6 @@ object GlobalShift extends SnapshotRegistry {
           cntDf
       else Seq(exchangeStrip)
     val stripFrame = subtrees.reduce(_.union(_))
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN_PASS1").contains("1"))
-      // dev-only (plan audit): the strip job runs eagerly inside build(),
-      // so its plan never appears in the returned frame's explain
-      System.err.println("=== GlobalShift pass-1 strip plan ===\n" +
-        stripFrame.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     if (captureStripPlanForTest)
       lastStripPlanForTest = stripFrame.queryExecution.executedPlan.toString
     val strip = stripFrame.collect()
@@ -408,22 +330,15 @@ object GlobalShift extends SnapshotRegistry {
     // per-partition sort total.
     val w = Window.partitionBy(col("__pid")).orderBy(okCols: _*)
     val biCol = row_number().over(w)
-    // misalignment guard (the GlobalRank rule): if pass 2 recomputes
-    // lost snapshot blocks, range boundaries are resampled per job and
-    // pass 2's partitions no longer match pass 1's count map — boundary
-    // rows would then silently miss (or misattach) their fills. Two
-    // checks, both in-plan: (1) the pass-2 pid must exist in the pass-1
-    // map; (2) PASS-PARITY: the pass-2 partition's recount (an
+    // misalignment guard: __pid is a pure projection, so pass 2 sees
+    // pass 1's buckets unless the input is not deterministic upstream
+    // (a recomputed source returning different rows). Boundary rows
+    // would then silently miss (or misattach) their fills, so two
+    // in-plan checks fail loudly instead: (1) the pass-2 pid must exist
+    // in the pass-1 map; (2) PASS-PARITY: the pass-2 bucket's recount (an
     // unbounded count over the same __pid partitioning — it reuses the
-    // pass-2 sort, no extra exchange) must EQUAL pass 1's count. (2)
-    // catches the resampled-boundaries-same-pid-set recompute (1)
-    // cannot: any row that moved across a boundary changes some
-    // partition's count. Still best-effort — a pathological resample
-    // that permutes rows while preserving every per-pid count would
-    // pass both — so the snapshot persist + managed/releasable
-    // lifecycle remains the actual correctness mechanism; the guard
-    // converts the likely failure modes into loud errors. Skipped only
-    // on empty input (no rows can reach the guard anyway).
+    // pass-2 sort, no extra exchange) must EQUAL pass 1's count. Skipped
+    // only on empty input (no rows can reach the guard anyway).
     val guardCounts = tamperCountsForTest(counts)
     val guardedBi =
       if (guardCounts.isEmpty) biCol
@@ -431,15 +346,26 @@ object GlobalShift extends SnapshotRegistry {
         val known = element_at(typedLit(guardCounts), col("__pid"))
         val recount = count(lit(1)).over(Window.partitionBy(col("__pid")))
         when(known.isNull || known =!= recount, raise_error(concat(
-          lit("GlobalShift: range-partition misalignment between strip " +
-            "and shift passes (snapshot recomputed with different " +
-            "boundaries?), pid="),
+          lit("GlobalShift: bucket misalignment between strip and shift " +
+            "passes (input not deterministic upstream), pid="),
           col("__pid").cast("string"),
           lit(" pass1="), coalesce(known.cast("string"), lit("absent")),
           lit(" pass2="), recount.cast("string")))).otherwise(biCol)
       }
+    // unique-total-order contract: equal tuples share a bucket, so
+    // comparing each row with its predecessor under the same window spec
+    // (reusing the pass-2 sort) finds every tie. Per key, not as one
+    // struct: a lag(struct) input is projected below the exchange and
+    // would shuffle every order key twice. A bucket's first row has no
+    // predecessor, whose null lag must not match a null key
+    val tied = okCols.map(k => lag(k, 1).over(w) <=> k).foldLeft(biCol > 1)(_ && _)
+    val checkedBi = when(tied, raise_error(concat(
+      lit("GlobalShift: order is not a unique total order, duplicate order " +
+        "tuple "), struct(okCols: _*).cast("string"),
+      lit(" — a shift over tied keys is position-dependent; add a tiebreaker key"))))
+      .otherwise(guardedBi)
     val joined = parted
-      .withColumn("__bi", guardedBi)
+      .withColumn("__bi", checkedBi)
       .join(broadcast(fillDf), Seq("__pid", "__bi"), "left")
     val withOutputs = shifts.zipWithIndex.foldLeft(joined) {
       case (d, (sp, si)) =>
@@ -454,9 +380,8 @@ object GlobalShift extends SnapshotRegistry {
             when(col(haveNames(si)), col(fillNames(si))).otherwise(defLit))
             .otherwise(localShift))
     }
-    val out = withOutputs.drop(
+    withOutputs.drop(
       okNames ++ svNames ++ fillNames ++ haveNames ++ hasNames ++
         Seq("__pid", "__bi"): _*)
-    (out, snapshot)
   }
 }

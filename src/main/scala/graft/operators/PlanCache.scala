@@ -14,12 +14,10 @@ import org.apache.spark.storage.StorageLevel
   * into one kernel pass plus cache reads.
   *
   * Values are unchanged — the pinned frame is deterministic, and a lost
-  * block simply recomputes (unlike the range-bucket snapshots, there is
-  * no cross-job alignment to lose). Lifecycle is the established
-  * [[SnapshotRegistry]] contract: harnesses release every pin between
-  * queries via [[GlobalOps.releaseSnapshots]]; library callers that
-  * execute a returned plan later simply pay a recompute on a released
-  * pin — never a wrong answer.
+  * block simply recomputes. Harnesses release every pin between queries
+  * via [[GlobalOps.releaseSnapshots]]; library callers that execute a
+  * returned plan later simply pay a recompute on a released pin — never
+  * a wrong answer.
   *
   * Library use WITHOUT a harness (ADVICE r21): pins accumulate until
   * `GlobalOps.releaseSnapshots()` or session end — a long-running
@@ -29,7 +27,7 @@ import org.apache.spark.storage.StorageLevel
   * ever costs a recompute. Pins deliberately wrap INTERNAL projections,
   * never caller-supplied frames, so a release can't unpersist a cache
   * entry the caller created and still depends on. */
-object PlanCache extends SnapshotRegistry {
+object PlanCache {
 
   /** Diagnostic kill-switch (A/B tool, not a tuning knob): with
     * SPARK_GRAFT_NO_PINS=1 every pin is a no-op, so pinned-vs-unpinned
@@ -37,13 +35,30 @@ object PlanCache extends SnapshotRegistry {
     * either way (the pins are a pure cost trade). */
   private val disabled = sys.env.get("SPARK_GRAFT_NO_PINS").contains("1")
 
+  private val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
   /** Persist `df` (MEMORY_AND_DISK) and register it for harness
     * release. Returns `df` itself for inline use. */
   def pinned(df: DataFrame): DataFrame = {
     if (!disabled) {
       df.persist(StorageLevel.MEMORY_AND_DISK)
-      register(Some(df))
+      pins.synchronized { pins += df }
     }
     df
   }
+
+  /** Unpersist every pin; returns the number released. */
+  private[operators] def releaseAll(): Int = pins.synchronized {
+    pins.foreach(_.unpersist(blocking = false))
+    val n = pins.size
+    pins.clear()
+    n
+  }
+}
+
+/** The one harness entry point: Bench/BenchOne/Verify/ExplainQuery call
+  * this between queries to release every [[PlanCache]] pin. HARNESS-ONLY:
+  * safe for a caller that owns every in-flight query. */
+object GlobalOps {
+  def releaseSnapshots(): Int = PlanCache.releaseAll()
 }

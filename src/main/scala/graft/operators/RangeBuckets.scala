@@ -1,110 +1,114 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.DoubleType
 
-/** Deterministic split-point range bucketing, shared by [[GlobalRank]]
-  * and [[GlobalShift]] (the two-pass global operators).
+/** Split-point range bucketing shared by the two-pass global operators
+  * ([[GlobalRank]], [[GlobalShift]], [[GlobalCumSum]]).
   *
-  * The problem it solves: Spark's `repartitionByRange` samples its
-  * boundaries PER MATERIALIZATION, so two jobs planning the same range
-  * exchange can disagree on which side of a cut a tie group falls —
-  * cross-job alignment then requires persisting the partitioned frame,
-  * which at 100 TB means materializing a full-width copy of the table.
-  *
-  * The fix: when the first order key is orderable into long/double,
-  * compute ~numParts quantile split points ONCE (one approxQuantile job
-  * over a scan pruned to that key), snap them into the key's own type,
-  * and stamp the bucket id as a PURE PROJECTION against the literal
-  * boundaries. Every job then derives the identical bucket for every
-  * row by construction — nothing persists, nothing can misalign. The
-  * split values themselves need not be exact or reproducible (they are
-  * captured once as literals; balance is the only thing at stake).
-  *
-  * Contiguity and ties: bucket b holds exactly the rows with
-  * splits(b-1) <= key < splits(b), so buckets are contiguous in the
-  * global order and EQUAL FIRST KEYS NEVER STRADDLE a bucket boundary —
-  * the invariant both global rank (tie groups stay together) and global
-  * shift (boundary hand-off) build on. Only balance degrades under
-  * heavy first-key ties; a key too coarse to fill ~numParts buckets is
-  * rejected (None) and callers fall back to the sampled full-tuple
-  * range partitioner + persisted snapshot, which can use the remaining
-  * order keys to split ties. */
-private[operators] object RangeBuckets {
+  * [[stamp]] samples the FULL order tuple once, keeps up to numParts − 1
+  * boundary tuples as literals of each key's own Catalyst type, and
+  * stamps `__pid` as a pure projection: the number of boundaries the
+  * row's tuple sorts strictly after. Every job over the stamped frame
+  * derives the same bucket for every row, so nothing is cached. The
+  * comparison is Spark's own struct `>`, which follows the ASC NULLS
+  * FIRST sort order of every orderable field type (NaN, −0.0, binary or
+  * collated strings, structs, arrays). Hence equal tuples always share a
+  * bucket and buckets are contiguous in the global order — the invariant
+  * all three operators build on — and later keys split a hot first-key
+  * value. The boundaries decide balance only, never correctness. */
+private[graft] object RangeBuckets {
 
-  /** The full tier selection both global operators run: the split-point
-    * tier when [[tryBucket]] accepts, else the sampled full-tuple range
-    * partitioner with a persisted MEMORY_AND_DISK snapshot (the frame
-    * the caller must keep cached while its plan is executable). Returns
-    * (pid-stamped frame, Some(snapshot) on the legacy tier). */
-  def bucketOrSnapshot(keyed: DataFrame,
-                       firstOrderType: org.apache.spark.sql.types.DataType,
-                       firstOkName: String, okCols: Seq[Column],
-                       numParts: Int): (DataFrame, Option[DataFrame]) =
-    tryBucket(keyed, firstOrderType, firstOkName, numParts) match {
-      case Some(p) => (p, None)
-      case None =>
-        val p = keyed.repartitionByRange(numParts, okCols: _*)
-          .withColumn("__pid", spark_partition_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (p, Some(p))
-    }
-
-  /** Stamp `keyed` with a deterministic contiguous-range bucket id
-    * `__pid` (int, 0-based in bucket order) derived from literal split
-    * points of the first order key, or None when the key type is not
-    * orderable to long/double or too coarse for ~numParts buckets. */
-  def tryBucket(keyed: DataFrame,
-                firstOrderType: org.apache.spark.sql.types.DataType,
-                firstOkName: String, numParts: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
-    val bk: Option[(Column, Boolean)] = firstOrderType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some((col(firstOkName).cast("long"), true))
-      case TimestampType => // epoch seconds: truncation is monotone, and
-        Some((col(firstOkName).cast("long"), true)) // ties → one bucket
-      case DateType => // days since epoch — already an exact long image
-        Some((unix_date(col(firstOkName)).cast("long"), true))
-      case FloatType | DoubleType =>
-        Some((col(firstOkName).cast("double"), false))
-      case dt: DecimalType if dt.precision <= 18 && dt.scale >= 0 =>
-        // exact unscaled-long image: v·10^s is integer-valued and fits
-        // a long for decimal(p ≤ 18, s) — injective, so the tier loses
-        // nothing (decimal money keys were the last common type still
-        // paying the persisted-snapshot path, VERDICT r16 #4)
-        Some(((col(firstOkName) *
-          lit(scala.math.BigDecimal(10).pow(dt.scale))).cast("long"), true))
-      case _: DecimalType =>
-        // p > 18 or legacy negative scale: the double image — rounding
-        // to nearest double is weakly monotone, so distinct keys can
-        // only COLLAPSE into one bucket (balance, never correctness)
-        Some((col(firstOkName).cast("double"), false))
-      case StringType =>
-        stringPrefixKey(keyed, firstOkName)
-      // Everything else — boolean (≤2 distinct values can never fill
-      // ~numParts buckets), struct/array/map keys, and degenerate inputs
-      // (all-null or single-distinct keys, rejected below/in the string
-      // probe) — deliberately falls to the legacy sampled+persisted tier:
-      // it is the universal fallback that can use the FULL order tuple to
-      // split ties, so it stays (decision recorded in SURVEY §2.6), and
-      // its snapshot lifecycle is pinned by the struct-keyed suite tests.
-      case _ => None
-    }
-    bk.flatMap { case (bkCol, integral) =>
-      val probs = (1 until numParts).map(_.toDouble / numParts).toArray
-      val q = keyed.select(bkCol.cast("double").as("__bk"))
-        .stat.approxQuantile("__bk", probs, 0.001).toSeq
-      val splits = (if (integral) q.map(Math.floor) else q).distinct.sorted
-      if (splits.size < math.max(1, numParts / 2)) None
+  /** Stamp `keyed` with `__pid` (int, 0-based in global order) from the
+    * ascending order keys `okNames`, aiming at `numParts` buckets. */
+  def stamp(keyed: DataFrame, okNames: Seq[String], numParts: Int): DataFrame = {
+    val bounds = boundaries(keyed, okNames, numParts)
+    warnIfBucketsLikelySpill(keyed, bounds.size + 1)
+    // struct `>` is Spark's lexicographic ASC NULLS FIRST ordering of the
+    // fields, compiled once per struct type — per-key (k > b) OR
+    // (k <=> b AND rest) chains outgrow the 64 KB codegen method limit at
+    // 200 buckets and 4 keys
+    val tuple = struct(okNames.map(col): _*)
+    val tupleType = keyed.select(tuple).schema.head.dataType
+    def after(b: Row): Column = tuple > Shim.toColumn(Literal.create(b, tupleType))
+    // balanced binary search over the sorted boundaries: depth log2(n)
+    def search(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
       else {
-        warnIfBucketsLikelySpill(keyed, splits.size + 1)
-        val pid = splits.map { s =>
-          val boundary = if (integral) lit(Math.floor(s).toLong) else lit(s)
-          when(bkCol >= boundary, 1).otherwise(0)
-        }.reduce(_ + _)
-        Some(keyed.withColumn("__pid", pid))
+        val mid = (lo + hi + 1) / 2
+        when(after(bounds(mid - 1)), search(mid, hi)).otherwise(search(lo, mid - 1))
       }
+    keyed.withColumn("__pid", search(0, bounds.size))
+  }
+
+  /** Up to numParts − 1 distinct ascending boundary tuples, picked the way
+    * Spark's RangePartitioner picks them: a fixed-seed reservoir of
+    * ~3 × 20 × numParts / inputPartitions tuples per input partition, each
+    * weighted by its partition's rows per sampled row, sorted by Spark's
+    * SQL ordering, cut at equal cumulative weight. One job; the fixed seed
+    * makes the same input give the same literals, hence the same plan. */
+  private def boundaries(keyed: DataFrame, okNames: Seq[String],
+                         numParts: Int): IndexedSeq[Row] =
+    if (numParts <= 1) IndexedSeq.empty
+    else {
+      val keys = keyed.select(okNames.map(col): _*)
+      val rdd = keys.rdd
+      val perPart = math.ceil(
+        3.0 * math.min(20.0 * numParts, 1e6) / math.max(1, rdd.getNumPartitions)).toInt
+      val sampled = rdd.mapPartitionsWithIndex { (idx, it) =>
+        val rng = new scala.util.Random(42L + idx)
+        val res = new Array[Row](perPart)
+        var n = 0L
+        it.foreach { r =>
+          if (n < perPart) res(n.toInt) = r
+          else {
+            val j = (rng.nextDouble() * (n + 1)).toLong
+            if (j < perPart) res(j.toInt) = r
+          }
+          n += 1
+        }
+        val kept = math.min(n, perPart.toLong).toInt
+        res.iterator.take(kept).map(r => Row.fromSeq(r.toSeq :+ n.toDouble / kept))
+      }
+      val w = okNames.size
+      val sorted = keyed.sparkSession
+        .createDataFrame(sampled, keys.schema.add("__w", DoubleType, nullable = false))
+        .repartition(1).sortWithinPartitions(okNames.map(col): _*)
+        .collect()
+      val step = sorted.map(_.getDouble(w)).sum / numParts
+      val bounds = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var cum = 0.0
+      var target = step
+      sorted.foreach { r =>
+        cum += r.getDouble(w)
+        if (cum >= target && bounds.size < numParts - 1) {
+          val key = Row.fromSeq(r.toSeq.take(w))
+          // Row equality can miss an SQL-equal pair (NaN inside an
+          // array); the extra boundary then only leaves a bucket empty
+          if (bounds.isEmpty || bounds.last != key) {
+            bounds += key
+            target += step
+          }
+        }
+      }
+      bounds.toIndexedSeq
     }
+
+  /** Exclusive prefix sums of per-bucket pass-1 totals, as a scan-local
+    * lookup by `__pid`. A bucket with no pass-1 entry means the input is
+    * not deterministic upstream (pass 2 saw rows pass 1 did not), so the
+    * lookup raises instead of returning a silently wrong null. */
+  def prefixOffset(op: String, perBucket: Seq[(Int, Long)]): Column = {
+    val byPid = perBucket.sortBy(_._1)
+    val offsets = byPid.map(_._1).zip(byPid.scanLeft(0L)(_ + _._2)).toMap
+    val raw = element_at(typedLit(offsets), col("__pid"))
+    when(raw.isNull, raise_error(concat(
+      lit(s"$op: bucket misalignment between pass 1 and pass 2 (input not " +
+        "deterministic upstream), pid="), col("__pid").cast("string"))))
+      .otherwise(raw)
   }
 
   /** The sizing rule the sf10 rehearsal measured (PLANS r19 triage): each
@@ -146,55 +150,4 @@ private[operators] object RangeBuckets {
               "slower by spill I/O; grow executor memory or parallelism.")
       }
     } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Bytes of string key used for split points, AFTER the corpus-wide
-    * common prefix: 6 bytes = 48 bits keeps every derived long exactly
-    * representable as a double, so approxQuantile (which works in
-    * doubles) cannot perturb the ordering of candidate boundaries. */
-  private val PrefixBytes = 6
-
-  /** Monotone long image of a STRING first key — the binary-prefix tier
-    * (closes the last persisted-snapshot path for the common crawl-scale
-    * case of text order keys: URL, domain, doc id).
-    *
-    * Under the default binary collation Spark compares strings bytewise
-    * unsigned on UTF-8, so "first K bytes as a big-endian integer" is a
-    * monotone (ties-collapsing) map — exactly what the split-point
-    * invariant needs: contiguous buckets, equal keys never straddling a
-    * boundary (keys sharing the K-byte image collapse into one bucket —
-    * balance, not correctness, is at stake). A naive first-K-bytes dies
-    * on exactly the motivating workload, though: every URL starts
-    * "https://", so K=6 would collapse the whole corpus into one image.
-    * One bounded min/max aggregate (2 values to the driver, pruned scan,
-    * map-side partials) finds the corpus-wide common prefix — for a
-    * bytewise order every value between min and max shares their common
-    * prefix, so ordering within the corpus is decided from byte L+1 on,
-    * and the image takes [[PrefixBytes]] bytes from there. min = max
-    * (single distinct key) is rejected as too coarse; all-null keys
-    * likewise (the legacy sampled tier handles both).
-    *
-    * The image is computed per row as a pure projection:
-    * `conv(rpad(hex(substring(utf8, L+1, 6)), 12, '0'), 16, 10)` —
-    * shorter/absent suffixes zero-pad, preserving bytewise order since
-    * suffix bytes are unsigned. Costs one extra bounded job vs the
-    * numeric tier (min/max before the quantile probe). */
-  private def stringPrefixKey(keyed: DataFrame,
-                              name: String): Option[(Column, Boolean)] = {
-    val mm = keyed.agg(min(col(name)).as("lo"), max(col(name)).as("hi")).head()
-    if (mm.isNullAt(0) || mm.isNullAt(1)) None
-    else {
-      val lo = mm.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val hi = mm.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var l = 0
-      while (l < lo.length && l < hi.length && lo(l) == hi(l)) l += 1
-      if (l == lo.length && l == hi.length) None // single distinct key
-      else {
-        val img = conv(
-          rpad(hex(substring(encode(col(name), "UTF-8"), l + 1, PrefixBytes)),
-            PrefixBytes * 2, "0"),
-          16, 10).cast("long")
-        Some((img, true))
-      }
-    }
-  }
 }

@@ -393,6 +393,92 @@ class CsvSuite extends SparkSpec {
     assert(!drop.columns.exists(_.contains("Idx")))
   }
 
+  // ---- hermetic twins of the reference-fixture tests above: small
+  // hand-written files under src/test/resources/csv, golden values
+  // cross-checked against DuckDB 1.0.0 read_csv on the same files ----
+
+  private def fixture(name: String): String =
+    getClass.getResource(s"/csv/$name").getPath
+
+  test("hermetic: semicolon separator with unicode headers") {
+    val df = Csv.readCsv(spark, fixture("studierende_semicolon.csv"), sep = ";")
+    assert(df.columns.toSeq == Seq("Fächergruppe", "Hochschulart", "Geschlecht",
+      "Jahr", "Studierende", "Studienanfänger_Anteil"))
+    assert(df.schema.map(_.dataType) ==
+      Seq(StringType, StringType, StringType, LongType, LongType, DoubleType))
+    assert(df.count() == 12L)
+    val sums = DataTable(df).groupBy("Fächergruppe")
+      .summarize("s" -> sum(col("Studierende")))
+      .df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(sums == Map("Geisteswissenschaften" -> 1930L,
+      "Ingenieurwissenschaften" -> 2995L, "Kunst, Kunstwissenschaft" -> 450L,
+      "Mathematik, Naturwissenschaften" -> 1595L,
+      "Rechts-, Wirtschafts- und Sozialwissenschaften" -> 2715L))
+    // arrange by the three categoricals: DuckDB's ORDER BY 1, 2, 3
+    val cats = Seq("Fächergruppe", "Hochschulart", "Geschlecht")
+    val sorted = DataTable(df).arrange(cats: _*).df
+      .select(cats.map(col): _*).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(sorted.take(3) == Seq(
+      ("Geisteswissenschaften", "Universität", "männlich"),
+      ("Geisteswissenschaften", "Universität", "weiblich"),
+      ("Ingenieurwissenschaften", "Fachhochschule", "männlich")))
+    assert(sorted.last == ("Rechts-, Wirtschafts- und Sozialwissenschaften",
+      "Universität", "männlich"))
+    assert(sorted == sorted.sorted)
+  }
+
+  test("hermetic: unnamed first column with scientific notation") {
+    val df = Csv.readCsv(spark, fixture("unnamed_scientific.csv"))
+    assert(df.columns.toSeq == Seq("Unnamed0", "time", "E_kin", "dose"))
+    assert(df.schema.map(_.dataType) ==
+      Seq(LongType, DoubleType, DoubleType, DoubleType))
+    val r = df.agg(sum("Unnamed0"), sum("E_kin"), min("dose"), max("E_kin"))
+      .head()
+    assert(r.getLong(0) == 10L)
+    assert(r.getDouble(1) == 50625.0 && r.getDouble(2) == -32.0 &&
+      r.getDouble(3) == 25000.0)
+    val sums = df.agg(sum("time"), sum("dose")).head()
+    assertAllClose(Seq(sums.getDouble(0), sums.getDouble(1)), Seq(0.0225, -30.686), 1e-12)
+  }
+
+  test("hermetic: sparse long-format CSV spreads and gathers back") {
+    val df = DataTable(Csv.readCsv(spark, fixture("fish_sparse.csv")))
+    assert(df.df.schema.map(_.dataType) == Seq(LongType, StringType, LongType))
+    assert(df.df.count() == 16L)
+    val stations = Seq("Base_TD", "I80_1", "Lisbon", "Release", "Rstr")
+    val wide = df.spread("station", "seen", values = stations)
+    assert(wide.df.count() == 6L)
+    // non-null cells per station, as DuckDB's PIVOT ... USING first(seen)
+    val seen = stations.map(s => wide.df.filter(col(s).isNotNull).count())
+    assert(seen == Seq(2L, 3L, 3L, 6L, 2L), s"per-station cells: $seen")
+    val long = wide.gather(stations, key = "station", value = "seen",
+      dropNulls = true)
+    assert(long.df.count() == 16L)
+  }
+
+  test("hermetic: common-column join modes") {
+    val dfChip = DataTable(Csv.readCsv(spark, fixture("chip_join.csv")))
+    val dfAll = DataTable(Csv.readCsv(spark, fixture("all_join.csv")))
+    val expEvNum = Seq(0L, 1L, 2L, 3L, 5L, 6L, 7L, 8L, 9L, 10L, 11L)
+    val ren = dfChip.innerJoin(dfAll, by = Seq("eventNumber"), merge = graft.api.CcRename)
+      .arrange("eventNumber")
+    assert(!ren.columns.contains("Idx"))
+    assert(ren.columns.contains("Idx_left") && ren.columns.contains("Idx_right"))
+    assert(colLongs(ren, "eventNumber") == expEvNum)
+    assert(colLongs(ren, "Idx_left").sum == 55L && colLongs(ren, "Idx_right").sum == 62L)
+    assert(colLongs(ren, "hits").sum == 520L && colDoubles(ren, "energy").sum == 21.75)
+    val left = dfChip.innerJoin(dfAll, by = Seq("eventNumber"), merge = graft.api.CcLeft)
+      .arrange("eventNumber")
+    assert(left.columns.contains("Idx"))
+    assert(!left.columns.exists(_.startsWith("Idx_")))
+    assert(colLongs(left, "Idx").sum == 55L)
+    assert(colLongs(left, "eventNumber") == expEvNum)
+    val drop = dfChip.innerJoin(dfAll, by = Seq("eventNumber"), merge = graft.api.CcDrop)
+    assert(!drop.columns.exists(_.contains("Idx")))
+    assert(drop.df.count() == 11L)
+  }
+
   test("mpg end-to-end slice (SURVEY §7.3; testDf.nim:1981 dplyr comparison)") {
     val mpg = DataTable(Csv.readCsv(spark, mpgPath))
     val res = mpg

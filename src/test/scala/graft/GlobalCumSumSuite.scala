@@ -6,8 +6,8 @@ import graft.operators.{GlobalCumSum, Sampling}
 
 /** Two-pass global cumulative sum + the systematic resampler built on
   * it: exact parity with the naive single-partition window (the
-  * semantics, not an acceptable plan), RANGE-frame tie behavior, tier
-  * discipline (numeric and prefix-string keys persist nothing), and
+  * semantics, not an acceptable plan), RANGE-frame tie behavior, no
+  * persist (numeric and prefix-string keys), and
   * the resampler's exact-total / bounds / determinism contract. */
 class GlobalCumSumSuite extends SparkSpec {
   import spark.implicits._
@@ -56,34 +56,10 @@ class GlobalCumSumSuite extends SparkSpec {
     GlobalCumSum.withGlobalCumSum(sframe, col("w"), Seq(col("k"))).count()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "split tiers must not persist anything")
-    assert(GlobalCumSum.liveSnapshotCount == 0)
 
     val empty = Seq.empty[(Long, Long)].toDF("k", "w")
     val e = GlobalCumSum.withGlobalCumSum(empty, col("w"), Seq(col("k")))
     assert(e.count() == 0L && e.columns.contains("cum"))
-  }
-
-  test("GlobalOps.releaseSnapshots frees every operator's legacy-tier snapshot") {
-    // one struct-keyed (legacy tier) plain call per two-pass operator —
-    // decimal keys take the r17 split tier now, struct keys still force
-    // the sampled+persist path; the single harness entry point must
-    // release all three — the forgettable-call-site hazard the round-16
-    // review flagged
-    import graft.operators.{GlobalOps, GlobalRank, GlobalShift}
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val dec = frame.withColumn("k", struct(col("k")))
-    assert(GlobalCumSum.withGlobalCumSum(dec, col("w"), Seq(col("k"))).count() == 1000L)
-    assert(GlobalRank.withGlobalRanks(dec.withColumnRenamed("w", "rid"),
-      Seq(col("k"))).count() == 1000L)
-    assert(GlobalShift.withGlobalLag(dec, "prev", col("w"), 1, Seq(col("k"))).count() == 1000L)
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(pinned.size == 3, s"expected 3 legacy snapshots, got $pinned")
-    // GlobalOps also drains PlanCache pins left by other suites sharing
-    // this SparkContext (r21), so assert >= and check the three
-    // operator registries directly
-    assert(GlobalOps.releaseSnapshots() >= 3)
-    assert(GlobalCumSum.liveSnapshotCount == 0 &&
-      GlobalRank.liveSnapshotCount == 0 && GlobalShift.liveSnapshotCount == 0)
   }
 
   test("reserved/output name collisions refuse up front") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.GlobalRank
+import graft.operators.{GlobalOps, GlobalRank, RangeBuckets}
 
 /** Two-pass global rank: value parity with the naive single-partition
   * window (which is the semantics, just not an acceptable plan), tie
@@ -64,102 +64,61 @@ class GlobalRankSuite extends SparkSpec {
     assert(r.getAs[Double]("prnk") == 0.0 && r.getAs[Double]("cdist") == 1.0)
 
     val empty = spark.emptyDataFrame.withColumn("v", lit(0L))
-    val live0 = GlobalRank.liveSnapshotCount
     val e = GlobalRank.withGlobalRanks(empty, Seq(col("v")))
     assert(e.count() == 0L)
     assert(e.columns.toSeq == Seq("v", "rnk", "drnk", "prnk", "cdist"))
-    // the empty-input short-circuit pins nothing — it must not register
-    // a dead handle that makes liveSnapshotCount over-report
-    assert(GlobalRank.liveSnapshotCount == live0)
   }
 
   test("plan: partitioned exchange, no SinglePartition anywhere") {
-    // high-card long key -> split-point tier: the exchange hashes the
-    // deterministic __pid buckets (legacy tier would show
-    // rangepartitioning); either way, never SinglePartition
+    // the exchange hashes the deterministic __pid buckets, never
+    // SinglePartition
     val plan = GlobalRank.withGlobalRanks(uniq, Seq(col("v")))
       .queryExecution.executedPlan.toString
-    val lower = plan.toLowerCase
-    assert(lower.contains("hashpartitioning(__pid") ||
-      lower.contains("rangepartitioning"), s"plan:\n$plan")
+    assert(plan.toLowerCase.contains("hashpartitioning(__pid"), s"plan:\n$plan")
     assert(!plan.contains("SinglePartition"), s"plan:\n$plan")
   }
 
   test("split-point tier: no snapshot pinned, release reports none, parity exact") {
+    GlobalOps.releaseSnapshots() // isolate from pins made by other suites
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(uniq, Seq(col("v")))
+    val ranked = GlobalRank.withGlobalRanks(uniq, Seq(col("v")))
     assert(ranked.count() == 1000L)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the split-point tier")
+    assert(GlobalOps.releaseSnapshots() == 0, "nothing to release")
     checkParity(uniq)
-  }
-
-  test("date key: split-point tier (days-since-epoch image), no persist, exact") {
-    // ingestion date is the most common global-order key in corpus work
-    // (VERDICT r17 #3): DateType must ride the split tier — days since
-    // epoch is already an exact monotone long image — persisting nothing
-    val dated = spark.range(1000)
-      .select(date_add(lit("2020-01-01").cast("date"),
-        ((col("id") * 379) % 1500).cast("int")).as("v"), col("id").as("rid"))
-      .repartition(5)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(dated, Seq(col("v")))
-    assert(ranked.count() == 1000L)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "date split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the date split tier")
-    checkParity(dated)
   }
 
   test("string key with a corpus-wide common prefix: split tier, no persist, plan-pinned") {
     // the motivating 100 TB workload (VERDICT r15 #3): ranking by URL —
-    // every value shares a long common prefix, so a naive first-K-bytes
-    // image collapses to one bucket; the tier must strip the corpus-wide
-    // common prefix (from one bounded min/max aggregate) and bucket on
-    // the bytes after it, persisting nothing
+    // every value shares a long common prefix, which the full-tuple
+    // split points must still spread over buckets, persisting nothing
     val urls = spark.range(1000)
       .select(concat(lit("https://www.example.com/page/"),
         format_string("%05d", (col("id") * 379) % 10007)).as("v"),
         col("id").as("rid"))
       .repartition(5)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(urls, Seq(col("v")))
+    val ranked = GlobalRank.withGlobalRanks(urls, Seq(col("v")))
     assert(ranked.count() == 1000L)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "string split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the string split tier")
-    val plan = GlobalRank.withGlobalRanks(urls, Seq(col("v")))
-      .queryExecution.executedPlan.toString
+    val plan = ranked.queryExecution.executedPlan.toString
     val lower = plan.toLowerCase
     assert(lower.contains("hashpartitioning(__pid"),
       s"expected deterministic __pid buckets, got:\n$plan")
     assert(!lower.contains("inmemorytablescan"),
-      s"string split tier must not read through a cached snapshot:\n$plan")
+      s"string key must not read through a cached snapshot:\n$plan")
     checkParity(urls)
-  }
-
-  test("single-distinct-value string key falls back to the legacy tier, stays exact") {
-    // min == max -> the prefix image is degenerate by construction; the
-    // tier must reject and the sampled legacy path must still rank
-    // (ties broken by nothing — all rank 1)
-    val const = spark.range(100)
-      .select(lit("https://only.example.com/").as("v"), col("id").as("rid"))
-      .repartition(3)
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(const, Seq(col("v")))
-    val rows = ranked.collect()
-    assert(rows.length == 100 && rows.forall(_.getAs[Long]("rnk") == 1L))
-    assert(release(), "legacy tier pins a snapshot the caller releases")
   }
 
   test("parity holds under AQE with coalescing forced (cross-job alignment)") {
     // The operator's correctness rests on the stats job and the rank job
-    // deriving identical range partitions. AQE's partition coalescing is
-    // the most plausible way for the two jobs to diverge, so force it:
-    // adaptive on, a high initial fan-out that tiny data guarantees AQE
-    // will rewrite, and coalescing explicitly enabled. Runtime stats over
-    // a deterministic source are deterministic → both jobs must coalesce
-    // identically, and ranks must still match the naive window.
+    // deriving identical buckets. AQE's partition coalescing rewrites
+    // each job's exchanges independently, so force it: adaptive on, a
+    // high initial fan-out that tiny data guarantees AQE will rewrite,
+    // and coalescing explicitly enabled. __pid is a projection, so ranks
+    // must still match the naive window.
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.enabled",
@@ -172,15 +131,10 @@ class GlobalRankSuite extends SparkSpec {
       conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "64")
       checkParity(tied)
       checkParity(uniq)
-      // struct keys FORCE the legacy sampled-range + persist tier — the
-      // path whose alignment this test was written to pin (numeric,
-      // decimal, date, AND string keys now take split-point tiers, where
-      // misalignment is impossible)
+      // struct, decimal and string keys under the same AQE pressure
       checkParity(tied.select(struct(col("v")).as("v"), col("rid")))
-      // the decimal unscaled-long split tier under the same AQE pressure
       checkParity(tied.select(
         col("v").cast("decimal(12,0)").as("v"), col("rid")))
-      // and the string binary-prefix tier under the same AQE pressure
       checkParity(tied.select(
         format_string("%05d", col("v")).as("v"), col("rid")))
     } finally saved.foreach {
@@ -190,12 +144,12 @@ class GlobalRankSuite extends SparkSpec {
   }
 
   test("parquet-backed tie-heavy source: parity survives job-specific range boundaries") {
-    // THE regression case: Spark's range boundaries are sampled with a
-    // seed involving the materialization-specific RDD id, so the stats
-    // job and the rank job can cut a heavy tie group to different sides
-    // (sf0.01 lineitem really did flip l_quantity=26 between two
-    // count-by-pid jobs). The persisted snapshot freezes the assignment;
-    // without it this test fails with ranks off by whole tie groups.
+    // THE regression case: Spark's own range boundaries are sampled with
+    // a seed involving the materialization-specific RDD id, so two jobs
+    // can cut a heavy tie group to different sides (sf0.01 lineitem
+    // really did flip l_quantity=26 between two count-by-pid jobs).
+    // Literal boundaries make the cut a projection; without that this
+    // test fails with ranks off by whole tie groups.
     val dir = java.nio.file.Files.createTempDirectory("graft_grank").toString
     try {
       spark.range(20000)
@@ -203,17 +157,11 @@ class GlobalRankSuite extends SparkSpec {
         .repartition(9)
         .write.mode("overwrite").parquet(dir)
       checkParity(spark.read.parquet(dir))
-      // legacy-tier twin: struct keys (same values, same heavy ties) go
-      // through the sampled range partitioner + persisted snapshot — the
-      // exact r10 regression this test exists for (decimal(12,2) rides
-      // the r17 unscaled-long split tier now; keep it as that tier's
-      // tie-heavy parquet parity pin)
+      // struct, decimal and string twins: same values, same heavy ties
       checkParity(spark.read.parquet(dir).select(
         struct(col("v")).as("v"), col("rid")))
       checkParity(spark.read.parquet(dir).select(
         col("v").cast("decimal(12,2)").as("v"), col("rid")))
-      // string twin now rides the binary-prefix split tier — parity must
-      // hold there too on the same tie-heavy parquet source
       checkParity(spark.read.parquet(dir).select(
         format_string("%09.2f", col("v")).as("v"), col("rid")))
     } finally {
@@ -221,64 +169,9 @@ class GlobalRankSuite extends SparkSpec {
     }
   }
 
-  test("managed variant releases the snapshot cache after use") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val n = GlobalRank.withGlobalRanksManaged(tied, Seq(col("v"))) { ranked =>
-      assert(ranked.filter(col("rnk").isNull).count() == 0)
-      ranked.count()
-    }
-    assert(n == 400L)
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty, s"leaked cached RDDs: ${after -- before}")
-  }
-
-  test("bench-loop shape: N plain invocations + releaseSnapshots leave zero live snapshots") {
-    // Bench/Verify run each query (a plain withGlobalRanks call), consume
-    // the result fully, then call releaseSnapshots() — after the loop no
-    // snapshot may stay pinned and no cached RDD may leak.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    GlobalRank.releaseSnapshots() // isolate from any earlier plain calls
-    (1 to 3).foreach { _ =>
-      val ranked = GlobalRank.withGlobalRanks(tied, Seq(col("v")))
-      assert(ranked.count() == 400L) // consume before release
-      GlobalRank.releaseSnapshots()
-    }
-    assert(GlobalRank.liveSnapshotCount == 0)
-    assert(GlobalRank.releaseSnapshots() == 0) // nothing left to release
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty, s"leaked cached RDDs: ${after -- before}")
-  }
-
-  test("releasable handle frees only its own snapshot, idempotently") {
-    // the per-call alternative to the process-wide wipe: two concurrent
-    // callers must not be able to unpersist each other's snapshot
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val live0 = GlobalRank.liveSnapshotCount
-    // struct keys -> always the legacy persist tier (numeric, decimal,
-    // date, and string keys all take split-point tiers now, which pin
-    // nothing and are tested separately); struct(v) orders exactly as v
-    val tiedS = tied.select(struct(col("v")).as("v"), col("rid"))
-    val uniqS = uniq.select(struct(col("v")).as("v"), col("rid"))
-    val (r1, rel1) = GlobalRank.withGlobalRanksReleasable(tiedS, Seq(col("v")))
-    val (r2, rel2) = GlobalRank.withGlobalRanksReleasable(uniqS, Seq(col("v")))
-    assert(r1.count() == 400L && r2.count() == 1000L)
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(pinned.size == 2, s"expected 2 pinned snapshots, got $pinned")
-    assert(rel1())
-    assert(!rel1(), "second release must be a no-op")
-    val remaining = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(remaining.size == 1, "releasing call 1 must not touch call 2")
-    // call 2 is untouched and still consumable
-    assert(r2.filter(col("rnk").isNull).count() == 0L)
-    assert(rel2())
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
-    // handle-managed snapshots never enter the plain-call registry
-    assert(GlobalRank.liveSnapshotCount == live0)
-  }
-
   test("misalignment guard is wired: offset lookup raises instead of nulling") {
-    // Real misalignment cannot be provoked from a deterministic source
-    // (that's the point), so pin the guard's presence in the plan: the
+    // Misalignment needs an input that is not deterministic upstream,
+    // so pin the guard's presence in the plan instead: the
     // rank projection must contain the raise_error branch, not a bare
     // element_at whose null would silently corrupt every rank.
     val analyzed = GlobalRank.withGlobalRanks(uniq, Seq(col("v")))
@@ -323,17 +216,26 @@ class GlobalRankSuite extends SparkSpec {
   }
 
   test("per-partition share is bounded by the range fan-out, not by key cardinality") {
-    // the pass the operator actually runs: range-partition on the order
-    // key. Explicit fan-out — on KB-sized test data AQE (correctly)
-    // coalesces the default fan-out to one partition, which would test
-    // the coalescer, not the range split
-    val sizes = uniq.repartitionByRange(8, col("v"))
-      .groupBy(spark_partition_id()).count()
-      .collect().map(_.getLong(1))
-    assert(sizes.length > 1, s"expected >1 range partitions, got ${sizes.toSeq}")
-    val total = sizes.sum.toDouble
-    // even split would be total/n; allow 4x sampling skew
-    assert(sizes.max <= 4 * total / sizes.length,
-      s"skewed range split: ${sizes.toSeq}")
+    // the stamp the operators actually run, with an explicit fan-out of
+    // 8 (on KB-sized data AQE would coalesce the default fan-out to one
+    // partition and test the coalescer instead)
+    def sizes(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      RangeBuckets.stamp(df, df.columns.toSeq, 8)
+        .groupBy("__pid").count().collect().map(_.getLong(1)).toSeq
+    def assertBalanced(s: Seq[Long]): Unit = {
+      assert(s.length > 1, s"expected >1 buckets, got $s")
+      // even share is total/8; allow 4x sampling skew
+      assert(s.max <= 4 * s.sum / 8.0, s"skewed buckets: $s")
+    }
+    assertBalanced(sizes(uniq.select(col("v"))))
+    // hot first key: 60% of rows share one first-key value, the other
+    // first keys and the second key are unique — first-key split points
+    // put the whole hot value in one bucket (62% of rows here), the full
+    // tuple splits it
+    val hot = spark.range(2000).select(
+      when(col("id") % 5 < 3, lit(0L)).otherwise(col("id")).as("a"),
+      ((col("id") * 379) % 2003).as("b"))
+      .repartition(5)
+    assertBalanced(sizes(hot))
   }
 }

@@ -29,19 +29,17 @@ class GlobalShiftSuite extends SparkSpec {
 
   test("global lag matches the single-partition reference for n = 1, 3, 7") {
     for (n <- Seq(1, 3, 7)) {
-      val (out, release) = GlobalShift.withGlobalLagReleasable(
+      val out = GlobalShift.withGlobalLag(
         frame, "prev", col("v"), n, Seq(col("k")))
       assert(got(out, "prev") == expectedLag(n), s"lag n=$n")
-      release()
     }
   }
 
   test("global lead matches the single-partition reference for n = 1, 3, 7") {
     for (n <- Seq(1, 3, 7)) {
-      val (out, release) = GlobalShift.withGlobalLeadReleasable(
+      val out = GlobalShift.withGlobalLead(
         frame, "next", col("v"), n, Seq(col("k")))
       assert(got(out, "next") == expectedLead(n), s"lead n=$n")
-      release()
     }
   }
 
@@ -56,59 +54,53 @@ class GlobalShiftSuite extends SparkSpec {
     // rows, so n=1 fills exactly the 3 interior partition-start rows
     // from across the boundary — if the hand-off were broken those rows
     // would be null/default, not the true predecessor
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       frame, "prev", col("v"), 1, Seq(col("k")), default = -1L)
     val vals = got(out, "prev")
     assert(vals.head == Some(-1L), "global first row takes the default")
     assert(vals.tail == expectedLag(1).tail.map(_.orElse(Some(-1L))),
       "every non-first row must see its true global predecessor")
-    release()
   }
 
   test("default fills only positions with no global predecessor/successor") {
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       frame, "prev", col("v"), 5, Seq(col("k")), default = 0L)
     assert(got(out, "prev") == expectedLag(5).map(_.orElse(Some(0L))))
-    release()
   }
 
   test("a genuine null shift value in the interior survives (no coalesce bug)") {
     val df = (1 to 40).map(i =>
       (i.toLong, if (i == 20) None else Some(i * 10L))).toDF("k", "v")
       .repartition(4)
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       df, "prev", col("v"), 1, Seq(col("k")), default = -1L)
     val vals = got(out, "prev")
     assert(vals(20) == None, "row 21 sees row 20's genuine null, not the default")
     assert(vals(0) == Some(-1L))
-    release()
   }
 
   test("n larger than any partition still hands off across several boundaries") {
     // 4 range partitions of ~25 rows each, n=30: every row's shift
     // crosses at least one boundary and some cross two
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       frame, "prev", col("v"), 30, Seq(col("k")))
     assert(got(out, "prev") == expectedLag(30))
-    release()
   }
 
   test("plan has no SinglePartition exchange (the operator's reason to exist)") {
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       frame, "prev", col("v"), 2, Seq(col("k")))
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"), plan)
-    release()
   }
 
   test("lead's final plan sorts each partition once (shared window spec)") {
-    val (out, release) = GlobalShift.withGlobalLeadReleasable(
+    val out = GlobalShift.withGlobalLead(
       frame, "next", col("v"), 2, Seq(col("k")))
     val plan = out.queryExecution.executedPlan.toString
     // row_number and lead ride one Window over [__ok0 ASC]; a second,
     // descending boundary-index window would show as "DESC" sort keys
     assert(!plan.contains("DESC"), plan)
-    release()
   }
 
   test("withGlobalShifts computes mixed lag+lead in one two-pass run") {
@@ -131,84 +123,62 @@ class GlobalShiftSuite extends SparkSpec {
   }
 
   test("split-point tier plan reads no snapshot (no InMemoryTableScan)") {
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       frame, "prev", col("v"), 2, Seq(col("k")))
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("InMemoryTableScan"), plan)
-    release()
   }
 
   test("a shift deeper than the boundary-row bound refuses up front") {
     val e = intercept[IllegalArgumentException] {
-      GlobalShift.withGlobalLagReleasable(
+      GlobalShift.withGlobalLag(
         frame, "prev", col("v"), 1 << 21, Seq(col("k")))
     }
     assert(e.getMessage.contains("boundary rows"), e.getMessage)
   }
 
-  test("releasable handle: no snapshot to release on the split-point tier") {
-    // long first key -> deterministic literal buckets, nothing persists
-    val (_, release) = GlobalShift.withGlobalLagReleasable(
-      frame, "prev", col("v"), 1, Seq(col("k")))
-    assert(!release())
-  }
-
-  test("releasable handle is idempotent and reports one real release (legacy tier)") {
-    // struct first key -> not in the split-point tier's type set (decimal
-    // and date now are) -> sampled range partitioner + persisted snapshot;
-    // struct(k) is order-isomorphic to k, so exactness still holds
-    val sframe = frame.withColumn("ks", struct(col("k")))
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
-      sframe, "prev", col("v"), 1, Seq(col("ks")))
-    assert(got(out, "prev") == expectedLag(1), "legacy tier stays exact")
-    assert(release())
-    assert(!release())
-  }
-
   test("string first key with a shared prefix: split-point tier, no persist, exact") {
     // the crawl-scale case (VERDICT r15 #3): a text order key whose
-    // values all share a long common prefix — the binary-prefix tier
-    // must strip the prefix, bucket on the next bytes, persist NOTHING,
-    // and stay exactly equal to the reference shift
+    // values all share a long common prefix — the full-tuple split
+    // points must still spread it over buckets, persist NOTHING, and
+    // stay exactly equal to the reference shift
     val sframe = frame.withColumn(
       "ks", concat(lit("https://www.example.com/page-"),
         format_string("%09d", col("k"))))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       sframe, "prev", col("v"), 1, Seq(col("ks")))
-    assert(got(out, "prev") == expectedLag(1), "string split tier stays exact")
+    assert(got(out, "prev") == expectedLag(1), "string key stays exact")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "string split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the string split tier")
   }
 
   test("empty input yields an empty shifted frame") {
     val empty = Seq.empty[(Long, Long)].toDF("k", "v")
-    val (out, release) = GlobalShift.withGlobalLagReleasable(
+    val out = GlobalShift.withGlobalLag(
       empty, "prev", col("v"), 2, Seq(col("k")))
     assert(out.count() == 0L)
     assert(out.columns.toSeq == Seq("k", "v", "prev"))
-    release()
   }
 
   test("input columns colliding with reserved internal names refuse up front") {
     val bad = frame.withColumn("__pid", lit(7))
     val e = intercept[IllegalArgumentException] {
-      GlobalShift.withGlobalLagReleasable(
+      GlobalShift.withGlobalLag(
         bad, "prev", col("v"), 1, Seq(col("k")))
     }
     assert(e.getMessage.contains("__pid"), e.getMessage)
     // __ok<i> order-key aliases are reserved too
     val bad2 = frame.withColumn("__ok0", lit(1))
     val e2 = intercept[IllegalArgumentException] {
-      GlobalShift.withGlobalLeadReleasable(
+      GlobalShift.withGlobalLead(
         bad2, "next", col("v"), 1, Seq(col("k")))
     }
     assert(e2.getMessage.contains("__ok0"), e2.getMessage)
     // a reserved OUTPUT name would be written into the internal slot
     // and erased by the closing drop — refuse it the same way
     val e3 = intercept[IllegalArgumentException] {
-      GlobalShift.withGlobalLagReleasable(
+      GlobalShift.withGlobalLag(
         frame, "__sv", col("v"), 1, Seq(col("k")))
     }
     assert(e3.getMessage.contains("output name"), e3.getMessage)
@@ -262,26 +232,11 @@ class GlobalShiftSuite extends SparkSpec {
     assert(bn == expectedLead(30))
   }
 
-  test("legacy (struct-key) tier: deep mixed lag+lead crossing several boundaries") {
-    // the r22 strip rewrite indexes tails from the bucket END (descending
-    // row_number) — exercise that indexing on the SAMPLED legacy tier,
-    // where bucket sizes are uneven, with shifts deeper than a bucket
-    val sframe = frame.withColumn("ks", struct(col("k")))
-    val out = GlobalShift.withGlobalShifts(sframe,
-      Seq(GlobalShift.Shift("prev", col("v"), 7, isLead = false, default = -1L),
-        GlobalShift.Shift("next", col("v"), 30, isLead = true)),
-      Seq(col("ks")))
-    assert(got(out, "prev") == expectedLag(7).map(_.orElse(Some(-1L))))
-    assert(got(out, "next") == expectedLead(30))
-    GlobalShift.releaseSnapshots()
-  }
-
   test("pass-parity guard trips loudly when pass-2 counts diverge from pass 1") {
-    // simulate the snapshot-recompute case via the test seam: the guard
-    // believes pass 1 saw one more row per partition than pass 2 has —
-    // exactly what a boundary-resampling recompute looks like from the
-    // guard's vantage point
-    val (out, snap) = GlobalShift.build(
+    // simulate an input that is not deterministic upstream via the test
+    // seam: the guard believes pass 1 saw one more row per bucket than
+    // pass 2 has
+    val out = GlobalShift.build(
       frame, Seq(GlobalShift.Shift("prev", col("v"), 2, isLead = false)),
       Seq(col("k")),
       tamperCountsForTest = m => m.map { case (p, n) => p -> (n + 1) })
@@ -290,13 +245,34 @@ class GlobalShiftSuite extends SparkSpec {
       if (t == null) Nil
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("misalignment")), e)
-    snap.foreach(_.unpersist())
     // untampered, the same build executes clean (the guard recount
     // matches pass 1) — pinning that the parity check has no false trips
-    val (ok, snap2) = GlobalShift.build(
+    val ok = GlobalShift.build(
       frame, Seq(GlobalShift.Shift("prev", col("v"), 2, isLead = false)),
       Seq(col("k")))
     assert(got(ok, "prev") == expectedLag(2))
-    snap2.foreach(_.unpersist())
+  }
+
+  test("a tied order fails loudly, naming the duplicate tuple") {
+    // the unique-total-order contract: a shift over tied keys is
+    // position-dependent, so pass 2 must refuse rather than pick one
+    val tied = Seq((1L, 10L), (2L, 20L), (2L, 30L), (3L, 40L))
+      .toDF("k", "v").repartition(2)
+    val e = intercept[Exception] {
+      GlobalShift.withGlobalLag(tied, "prev", col("v"), 1, Seq(col("k"))).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(m =>
+      m.contains("not a unique total order") && m.contains("{2}")), e)
+    // a single null key is a value like any other, not a tie with the
+    // missing predecessor of its bucket's first row
+    val oneNull = Seq((None, 10L), (Some(2L), 20L), (Some(3L), 30L))
+      .toDF("k", "v")
+    val prev = GlobalShift.withGlobalLag(oneNull, "prev", col("v"), 1, Seq(col("k")))
+      .orderBy(col("k").asc_nulls_first).select("prev").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    assert(prev == Seq(None, Some(10L), Some(20L)))
   }
 }
