@@ -122,6 +122,19 @@ class GlobalShiftSuite extends SparkSpec {
     assert(got(out, "prev") == expectedLag(1))
   }
 
+  test("legacy (struct-key) tier: deep mixed lag+lead crossing several boundaries") {
+    // struct keys are stamped by the same full-tuple split points; the
+    // strip indexes tails from the bucket END (descending row_number),
+    // so shifts deeper than a bucket must still hand off exactly
+    val sframe = frame.withColumn("ks", struct(col("k")))
+    val out = GlobalShift.withGlobalShifts(sframe,
+      Seq(GlobalShift.Shift("prev", col("v"), 7, isLead = false, default = -1L),
+        GlobalShift.Shift("next", col("v"), 30, isLead = true)),
+      Seq(col("ks")))
+    assert(got(out, "prev") == expectedLag(7).map(_.orElse(Some(-1L))))
+    assert(got(out, "next") == expectedLead(30))
+  }
+
   test("split-point tier plan reads no snapshot (no InMemoryTableScan)") {
     val out = GlobalShift.withGlobalLag(
       frame, "prev", col("v"), 2, Seq(col("k")))
