@@ -373,74 +373,15 @@ object Dedup {
     * intersection/union counts, NO false negatives and no estimation.
     * The guaranteed-exact sibling of the MinHash screen (which trades
     * recall for one pass) and the ground-truth generator for the
-    * recall/precision evals.
-    *
-    * Scale shape — prefix filtering (the PPJoin family, Xiao et al.
-    * 2008), which makes the classic "self-join the inverted index"
-    * quadratic blowup unnecessary: each document's shingle set is
-    * ordered RAREST-FIRST (ascending document frequency, shingle hash
-    * tiebreak — one df aggregate over the exploded index), and only the
-    * first n − ceil(τ·n) + 1 shingles of each set are indexed. Two sets
-    * with overlap ≥ t share an element among their first (size − t + 1)
-    * elements under ANY common total order — so every qualifying pair
-    * still collides (exactness), but the join explodes only on RARE
-    * shingles: a boilerplate shingle shared by 10^6 documents sorts to
-    * the tail of every set and never enters the index (the naive join
-    * pays df² for it). Candidates then verify by one bounded
-    * `array_intersect` against the two full sets (re-joined by id —
-    * payload rides the small candidate side). Measured at sf0.1: 35 s
-    * naive self-join → ~2 s prefix-filtered, same output.
-    *
-    * Emits (id_a, id_b, inter, uni) with id_a < id_b; the threshold is
-    * the integer cross-multiplication `inter·100 ≥ tauPct·uni` (no
-    * float compare — DuckDB-replayable). */
+    * recall/precision evals. Emits (id_a, id_b, inter, uni) with
+    * id_a < id_b; the threshold is the integer cross-multiplication
+    * `inter·100 ≥ tauPct·uni` (no float compare — DuckDB-replayable).
+    * Shares [[jaccardCore]], which documents the plan, with
+    * [[jaccardSimilarityJoinAB]]. */
   def jaccardSimilarityJoin(df: DataFrame, textCol: String, idCol: String,
                             tauPct: Int = 50,
-                            shingleSize: Int = 3): DataFrame = {
-    require(tauPct > 0 && tauPct <= 100, s"tauPct in (0,100], got $tauPct")
-    // NOT PlanCache-pinned (r21, measured): the frame feeds four plan
-    // branches, but the ABAB isolated A/B read pinned ~0.5 s SLOWER at
-    // sf0.1 (q_jaccard_join 2.5-2.8 unpinned vs 3.2+ pinned; the
-    // DistinctShingleHashes kernel is cheap enough that re-scanning
-    // beats caching the array column, and the cached relation's stats
-    // perturb AQE's join choices) — recompute deliberately kept
-    val sets = shingleSets(df, textCol, idCol, shingleSize)
-    val ex = sets.select(col("id"), explode(col("__ss")).as("__h"))
-    val dfc = ex.groupBy("__h").agg(count(lit(1)).as("__df"))
-    // rarest-first total order (df, hash) — collect_list order is
-    // nondeterministic, array_sort on the struct normalizes it
-    val sorted = ex.join(dfc, Seq("__h"))
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("__df").as("d"), col("__h").as("h"))))
-        .as("__sw"))
-      .select(col("id"), transform(col("__sw"), x => x.getField("h")).as("__ss"))
-    // prefix length n − ceil(τn) + 1. LONG arithmetic: a pathological
-    // mega-document (the exact input the prefix filter insures against)
-    // with > (2^31−100)/tauPct distinct shingles would wrap a 32-bit
-    // product and disable pruning — or drive slice() negative. The
-    // double division stays exact (tauPct·n + 99 ≪ 2^53 for any long n
-    // a real document can reach).
-    val n = size(col("__ss")).cast("long")
-    val p = (n - floor((lit(tauPct.toLong) * n + lit(99L)).cast("double") / lit(100.0))
-      .cast("long") + lit(1L)).cast("int")
-    val pre = sorted.select(col("id"), explode(slice(col("__ss"), lit(1), p)).as("__h"))
-    val pairs = pre.select(col("id").as("id_a"), col("__h"))
-      .join(pre.select(col("id").as("id_b"), col("__h")), Seq("__h"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // verify against the PLAIN kernel sets (set membership doesn't care
-    // about the df order) — a pure projection per branch, instead of
-    // re-deriving the sorted index subtree twice more
-    pairs
-      .join(sets.select(col("id").as("id_a"), col("__ss").as("__sa")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("__ss").as("__sb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("inter"),
-        (size(col("__sa")) + size(col("__sb"))).cast("long").as("__tot"))
-      .withColumn("uni", col("__tot") - col("inter"))
-      .filter(col("inter") * lit(100L) >= lit(tauPct.toLong) * col("uni"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("uni"))
-  }
+                            shingleSize: Int = 3): DataFrame =
+    jaccardCore(Seq(df), textCol, idCol, tauPct, shingleSize)
 
   /** Precision twin of [[minhashRecallEval]]: every CANDIDATE pair the
     * banding configuration emits, annotated with its exact
@@ -457,8 +398,8 @@ object Dedup {
                            bucketCap: Int = 64, minEstJaccard: Double = 0.5,
                            tauPct: Int = 50): DataFrame = {
     require(tauPct > 0 && tauPct <= 100, s"tauPct in (0,100], got $tauPct")
-    // candidates are LSH-bounded, so exact overlap is ONE bounded
-    // array_intersect per candidate (full sets re-joined by id) — no
+    // candidates are LSH-bounded, so exact overlap is ONE sorted-set
+    // merge per candidate (full sets re-joined by id) — no
     // pair-generation join at all on the exact side
     val sets = PlanCache.pinned(
       shingleSets(df, textCol, idCol, shingleSize)
@@ -468,8 +409,7 @@ object Dedup {
         col("__n").as("__na")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("__ss").as("__sb"),
         col("__n").as("__nb")), Seq("id_b"))
-      .withColumn("inter",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+      .withColumn("inter", sortedIntersectCount(col("__sa"), col("__sb")))
       .withColumn("uni", col("__na") + col("__nb") - col("inter"))
       .select(col("id_a"), col("id_b"), col("est_jaccard"),
         col("inter"), col("uni"),
@@ -490,7 +430,7 @@ object Dedup {
     * both directions (`DIV` — exact cross-engine); gate on the greater
     * of the two to catch quote/wrapper duplication. Bounded shape:
     * candidates are capped-bucket-bounded, the exact side is one
-    * array_intersect per candidate — never all-pairs. */
+    * sorted-set merge per candidate — never all-pairs. */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
                        k: Int = 12, w: Int = 8, bucketCap: Int = 64,
                        minShared: Long = 4L,
@@ -504,8 +444,7 @@ object Dedup {
         col("__n").as("__na")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("__ss").as("__sb"),
         col("__n").as("__nb")), Seq("id_b"))
-      .withColumn("inter",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+      .withColumn("inter", sortedIntersectCount(col("__sa"), col("__sb")))
       .select(col("id_a"), col("id_b"), col("inter"),
         col("__na").as("n_a"), col("__nb").as("n_b"),
         expr("inter * 100 DIV __na").as("cont_a_pct"),
@@ -515,46 +454,93 @@ object Dedup {
   /** TWO-TABLE exact Jaccard similarity join — [[jaccardSimilarityJoin]]
     * across relations (entity matching / record linkage: crawl vs
     * curated, batch vs corpus): every (left, right) pair with
-    * distinct-shingle Jaccard ≥ `tauPct`/100 and exact counts. Same
-    * prefix-filter guarantee, with ONE SHARED total order: document
-    * frequencies are counted over the UNION of both sides' shingle
-    * index, so both prefixes are cut under the same rare-first order —
-    * the condition the prefix lemma needs. Join explodes only on rare
-    * shingles; verify is one bounded array_intersect per candidate.
+    * distinct-shingle Jaccard ≥ `tauPct`/100 and exact counts. The two
+    * sides' ids may overlap — each row carries its side.
     * Output: (id_a from left, id_b from right, inter, uni). */
   def jaccardSimilarityJoinAB(left: DataFrame, right: DataFrame,
                               textCol: String, idCol: String,
                               tauPct: Int = 50,
-                              shingleSize: Int = 3): DataFrame = {
+                              shingleSize: Int = 3): DataFrame =
+    jaccardCore(Seq(left, right), textCol, idCol, tauPct, shingleSize)
+
+  /** The one exact Jaccard join: one side joins itself (`id_a < id_b`),
+    * two sides join left × right. Ids must be unique within a side.
+    *
+    * Prefix filtering (PPJoin, Xiao et al. 2008): each set is ordered
+    * RAREST-FIRST (document frequency, then hash; df counted over every
+    * side, so all prefixes are cut under ONE total order) and only its
+    * first n − ceil(τ·n) + 1 shingles are indexed. Two sets with
+    * overlap ≥ t share an element among their first (size − t + 1)
+    * under any common total order, so every qualifying pair collides,
+    * but the join explodes only on RARE shingles: a boilerplate shingle
+    * in 10^6 documents sorts to every set's tail and is never indexed.
+    *
+    * Plan shape, all measured (`plans/jaccard_core/README.md`):
+    *  - the shingle kernel runs ONCE per document per side. Spark infers
+    *    `size(x) > 0 AND isnotnull(x)` for a plain `explode(x)` of a
+    *    column and pushes it below the projection that computes x, which
+    *    evaluates the kernel three times; `explode_outer` plus a null
+    *    filter on the element infers nothing. df is a window count over
+    *    the exploded rows, not a join back to a second kernel scan.
+    *  - ONE per-(side, id) index aggregate carries both the rarest-first
+    *    `(df, hash)` array for prefixes and the ascending hash array for
+    *    verification. Each reader uses both columns (prefix length from
+    *    the hash array's size, union size from the prefix array's), so
+    *    column pruning leaves one aggregate that AQE's exchange reuse
+    *    shares across the prefix and both verify branches. Not
+    *    `PlanCache`-pinned: the reused exchange already computes the
+    *    index once per query.
+    *  - verification is one [[org.apache.spark.sql.graftshim
+    *    .SortedIntersectCount]] merge per candidate, after the candidates
+    *    are repartitioned to the session's shuffle partitions by
+    *    (id_a, id_b). The explicit count keeps AQE from coalescing that
+    *    stage to one task, and a caller's global sort re-samples only
+    *    this cheap stage, not candidate generation. */
+  private def jaccardCore(sides: Seq[DataFrame], textCol: String, idCol: String,
+                          tauPct: Int, shingleSize: Int): DataFrame = {
     require(tauPct > 0 && tauPct <= 100, s"tauPct in (0,100], got $tauPct")
-    // not pinned — the jaccardSimilarityJoin measurement (pin slower)
-    val lSets = shingleSets(left, textCol, idCol, shingleSize)
-    val rSets = shingleSets(right, textCol, idCol, shingleSize)
-    val union = lSets.select(col("id"), explode(col("__ss")).as("__h"))
-      .unionByName(rSets.select(col("id"), explode(col("__ss")).as("__h")))
-    val dfc = union.groupBy("__h").agg(count(lit(1)).as("__df"))
-    def prefixed(sets: DataFrame): DataFrame = {
-      val sorted = sets.select(col("id"), explode(col("__ss")).as("__h"))
-        .join(dfc, Seq("__h"))
-        .groupBy("id")
-        .agg(array_sort(collect_list(struct(col("__df").as("d"), col("__h").as("h"))))
-          .as("__sw"))
-        .select(col("id"),
-          transform(col("__sw"), x => x.getField("h")).as("__ss"))
-      val n = size(col("__ss")).cast("long")
-      val p = (n - floor((lit(tauPct.toLong) * n + lit(99L)).cast("double") / lit(100.0))
-        .cast("long") + lit(1L)).cast("int")
-      sorted.select(col("id"), explode(slice(col("__ss"), lit(1), p)).as("__h"))
-    }
-    val pairs = prefixed(lSets).select(col("id").as("id_a"), col("__h"))
-      .join(prefixed(rSets).select(col("id").as("id_b"), col("__h")), Seq("__h"))
-      .select("id_a", "id_b").distinct()
+    val last = sides.size - 1
+    val ex = sides.zipWithIndex.map { case (d, s) =>
+      d.select(lit(s).as("__side"), col(idCol).as("id"),
+        explode_outer(shingleHashes(col(textCol), shingleSize)).as("__h"))
+    }.reduce(_ unionByName _).filter(col("__h").isNotNull)
+    // rarest-first total order (df, hash) — collect_list order is
+    // nondeterministic, array_sort normalizes both arrays
+    val index = ex.withColumn("__df", count(lit(1)).over(Window.partitionBy("__h")))
+      .groupBy("__side", "id")
+      .agg(array_sort(collect_list(struct(col("__df").as("d"), col("__h").as("h"))))
+        .as("__sw"), array_sort(collect_list(col("__h"))).as("__ss"))
+    // prefix length n − ceil(τn) + 1. LONG arithmetic: a pathological
+    // mega-document (the exact input the prefix filter insures against)
+    // with > (2^31−100)/tauPct distinct shingles would wrap a 32-bit
+    // product and disable pruning — or drive slice() negative. The
+    // double division stays exact (tauPct·n + 99 ≪ 2^53 for any long n
+    // a real document can reach).
+    val n = size(col("__ss")).cast("long")
+    val p = (n - floor((lit(tauPct.toLong) * n + lit(99L)).cast("double") / lit(100.0))
+      .cast("long") + lit(1L)).cast("int")
+    def prefix(side: Int, id: String): DataFrame =
+      index.filter(col("__side") === side)
+        .select(col("id").as(id), explode(slice(col("__sw"), lit(1), p)).as("__e"))
+        .select(col(id), col("__e.h").as("__h"))
+    val joined = prefix(0, "id_a").join(prefix(last, "id_b"), Seq("__h"))
+    val pairs = (if (last == 0) joined.filter(col("id_a") < col("id_b")) else joined)
+      .select("id_a", "id_b")
+      .repartition(sides.head.sparkSession.sessionState.conf.numShufflePartitions,
+        col("id_a"), col("id_b"))
+      .distinct()
+    // __sw before __ss, as in prefix(): the reader's column order becomes
+    // the aggregate's function order, and a reordered aggregate is a
+    // different exchange that reuse no longer matches
+    def sets(side: Int, id: String, ss: String): DataFrame =
+      index.filter(col("__side") === side)
+        .select(col("id").as(id), size(col("__sw")).cast("long").as(s"${ss}_n"), col("__ss").as(ss))
     pairs
-      .join(lSets.select(col("id").as("id_a"), col("__ss").as("__sa")), Seq("id_a"))
-      .join(rSets.select(col("id").as("id_b"), col("__ss").as("__sb")), Seq("id_b"))
+      .join(sets(0, "id_a", "__sa"), Seq("id_a"))
+      .join(sets(last, "id_b", "__sb"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("inter"),
-        (size(col("__sa")) + size(col("__sb"))).cast("long").as("__tot"))
+        sortedIntersectCount(col("__sa"), col("__sb")).as("inter"),
+        (col("__sa_n") + col("__sb_n")).as("__tot"))
       .withColumn("uni", col("__tot") - col("inter"))
       .filter(col("inter") * lit(100L) >= lit(tauPct.toLong) * col("uni"))
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"))
@@ -562,19 +548,27 @@ object Dedup {
 
   /** Per-doc DISTINCT shingle-hash sets `(id, __ss)` — the exact-overlap
     * side of the eval/similarity family. ONE codegen'd kernel call per
-    * row ([[org.apache.spark.sql.graftshim.DistinctShingleHashes]], the
-    * decontamination family's hash48-of-space-joined-window convention,
-    * kernel≡Column-pipeline parity pinned in TextSuite) — the
-    * similarity join consumes this projection from several plan
-    * branches, and an interpreted HOF chain here multiplied into ~40 s
-    * at sf0.1 where the kernel costs ~1 s. Pure projection, no
-    * shuffle. */
+    * row ([[shingleHashes]]) — an interpreted HOF chain here multiplied
+    * into ~40 s at sf0.1 where the kernel costs ~1 s. Pure projection,
+    * no shuffle. */
   private def shingleSets(df: DataFrame, textCol: String,
-                          idCol: String, shingleSize: Int): DataFrame = {
+                          idCol: String, shingleSize: Int): DataFrame =
+    df.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleSize).as("__ss"))
+
+  /** Ascending distinct word-shingle hashes of `text`
+    * ([[org.apache.spark.sql.graftshim.DistinctShingleHashes]], the
+    * decontamination family's hash48-of-space-joined-window convention,
+    * kernel≡Column-pipeline parity pinned in TextSuite). */
+  private def shingleHashes(text: Column, shingleSize: Int): Column = {
     import org.apache.spark.sql.graftshim.{DistinctShingleHashes, Shim}
-    df.select(col(idCol).as("id"),
-      Shim.toColumn(DistinctShingleHashes(
-        Shim.toExpression(col(textCol)), shingleSize)).as("__ss"))
+    Shim.toColumn(DistinctShingleHashes(Shim.toExpression(text), shingleSize))
+  }
+
+  /** |a ∩ b| of two [[shingleHashes]]-shaped (ascending distinct) sets —
+    * [[org.apache.spark.sql.graftshim.SortedIntersectCount]], a long. */
+  private def sortedIntersectCount(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graftshim.{Shim, SortedIntersectCount}
+    Shim.toColumn(SortedIntersectCount(Shim.toExpression(a), Shim.toExpression(b)))
   }
 
   /** Incremental NEAR-dup screen — [[exactIncrementalAgainstFps]]'s
@@ -1023,7 +1017,7 @@ object Dedup {
   def contaminationScore(df: DataFrame, bench: DataFrame, textCol: String,
                          idCol: String, n: Int = 8,
                          maxSetShingles: Int = 2000000): DataFrame = {
-    import org.apache.spark.sql.graftshim.{DistinctShingleHashes, Shim, SortedMembershipCount}
+    import org.apache.spark.sql.graftshim.{Shim, SortedMembershipCount}
     val benchShingles = benchShingleHashes(bench, textCol, n).distinct()
     tieredOverStore(benchShingles, "__h", maxSetShingles) {
       require(!df.isStreaming,
@@ -1032,9 +1026,7 @@ object Dedup {
           "aggregates per id — not runnable on a stream; raise " +
           "maxSetShingles (sorted longs, 8 bytes each)")
     } { sorted =>
-      df.select(col(idCol),
-          Shim.toColumn(DistinctShingleHashes(
-            Shim.toExpression(col(textCol)), n)).as("__hs"))
+      df.select(col(idCol), shingleHashes(col(textCol), n).as("__hs"))
         .select(col(idCol),
           coalesce(size(col("__hs")).cast("long"), lit(0L)).as("n_shingles"),
           coalesce(Shim.toColumn(SortedMembershipCount(
@@ -1090,9 +1082,8 @@ object Dedup {
     * would drop it implicitly — the filter keeps the paths identical). */
   def substringDupStats(df: DataFrame, textCol: String, idCol: String,
                         n: Int = 8, maxSharedSet: Int = 4000000): DataFrame = {
-    import org.apache.spark.sql.graftshim.{DistinctShingleHashes, Shim, SortedMembershipCount}
-    val hashesCol = Shim.toColumn(DistinctShingleHashes(
-      Shim.toExpression(col(textCol)), n))
+    import org.apache.spark.sql.graftshim.{Shim, SortedMembershipCount}
+    val hashesCol = shingleHashes(col(textCol), n)
     // PlanCache pin (r21): consumed by the shared-hash probe AND the
     // final projection — unpinned, the window-hash kernel ran twice
     val withHashes = PlanCache.pinned(df.filter(col(textCol).isNotNull)

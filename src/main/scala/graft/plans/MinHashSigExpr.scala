@@ -3,7 +3,7 @@
 // AbstractDataType. Logically this is graft's plans/ extension layer.
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -330,6 +330,27 @@ object GraftHash {
     cnt
   }
 
+  /** |a ∩ b| of two ASCENDING, DISTINCT long arrays (the
+    * [[distinctShingleHashes]] shape) — one linear merge, no hashing, no
+    * allocation. Unsorted or repeated input gives a wrong count, not an
+    * error: the caller owns the shape. */
+  def sortedIntersectCount(a: org.apache.spark.sql.catalyst.util.ArrayData,
+                           b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var cnt = 0L
+    var i = 0
+    var j = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x < y) i += 1
+      else if (x > y) j += 1
+      else { cnt += 1; i += 1; j += 1 }
+    }
+    cnt
+  }
+
   /** THE shingle-construction contract, shared by every window kernel
     * (membership, Bloom, distinct-hash collection) and parity-pinned
     * against the Column pipeline (`wordShinglesFromTokens`): fewer than
@@ -635,6 +656,36 @@ case class SortedMembershipCount(child: Expression, sorted: Array[Long])
     val gh = GraftHash.getClass.getName.stripSuffix("$") // static forwarder
     nullSafeCodeGen(ctx, ev, arr =>
       s"${ev.value} = $gh.countSortedIn($arr, $sRef);")
+  }
+}
+
+/** Codegen'd set-intersection size of two ascending distinct
+  * `array<long>` columns ([[GraftHash.sortedIntersectCount]]) — the
+  * exact-overlap verify step of the Jaccard/containment family over two
+  * [[DistinctShingleHashes]] sets. Equals `size(array_intersect(a, b))`
+  * on that shape at a linear merge's cost (Spark's generic intersect
+  * hashes one side per row). NULL if either side is NULL. */
+case class SortedIntersectCount(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(
+    ArrayType(LongType, containsNull = false), ArrayType(LongType, containsNull = false))
+  override def dataType: DataType = LongType
+  override def prettyName: String = "sorted_intersect_count"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    GraftHash.sortedIntersectCount(
+      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gh = GraftHash.getClass.getName.stripSuffix("$") // static forwarder
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = $gh.sortedIntersectCount($a, $b);")
   }
 }
 

@@ -171,6 +171,70 @@ class CodegenSuite extends SparkSpec {
     }
   }
 
+  test("exact Jaccard joins: one kernel branch per side, no kernel filter, no array_intersect") {
+    // executed AQE-final plan at sf0.01. A plain explode gets an inferred
+    // size(kernel) > 0 filter pushed below the kernel projection (the
+    // kernel then runs three times per document); a df or verify branch
+    // that does not share the one index exchange scans the kernel again
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression}
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.graftshim.DistinctShingleHashes
+    // every node that runs: query stages are entered, a reused exchange
+    // is not (it re-reads another stage's output)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case o => o.children.flatMap(nodes)
+    })
+    def uses(p: SparkPlan)(f: Expression => Boolean): Boolean =
+      p.expressions.exists(_.exists(f))
+    val kernel = (e: Expression) => e.isInstanceOf[DistinctShingleHashes]
+    val docs = Tables.df(spark, s"${new java.io.File(sfDir).getParent}/sf0.01", "documents")
+    Seq(
+      "self" -> (1, Dedup.jaccardSimilarityJoin(docs, "text", "doc_id")),
+      "ab" -> (2, Dedup.jaccardSimilarityJoinAB(docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1), "text", "doc_id"))
+    ).foreach { case (name, (sides, out)) =>
+      assert(out.collect().nonEmpty, s"$name: sf0.01 must contain pairs")
+      val plan = out.queryExecution.executedPlan
+      val ns = nodes(plan)
+      assert(!ns.exists { case f: FilterExec => uses(f)(kernel); case _ => false },
+        s"$name: a Filter evaluates the kernel:\n$plan")
+      assert(ns.count(uses(_)(kernel)) == sides,
+        s"$name: kernel must run in exactly $sides branch(es):\n$plan")
+      assert(!ns.exists(uses(_)(_.isInstanceOf[ArrayIntersect])),
+        s"$name: array_intersect left in the plan:\n$plan")
+    }
+  }
+
+  test("SortedIntersectCount compiles into a WholeStageCodegen span") {
+    import org.apache.spark.sql.graftshim.{DistinctShingleHashes, Shim, SortedIntersectCount}
+    val docs = Tables.df(spark, sfDir, "documents")
+    // a document's shingles vs those of its first 200 chars: overlapping
+    def sets(text: org.apache.spark.sql.Column) =
+      DistinctShingleHashes(Shim.toExpression(text), 2)
+    val (full, head) = (sets(col("text")), sets(substring(col("text"), 1, 200)))
+    val out = docs.select(col("doc_id"),
+      Shim.toColumn(SortedIntersectCount(full, head)).as("c"),
+      size(array_intersect(Shim.toColumn(full), Shim.toColumn(head))).cast("long").as("want"))
+    assert(wholeStageSpans(out).exists(_.toString.contains("sorted_intersect_count")),
+      s"sorted_intersect_count not inside WholeStageCodegen:\n${out.queryExecution.executedPlan}")
+    // CODEGEN_ONLY: a Janino failure is an error, not a silent fallback
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      val rows = out.collect()
+      assert(rows.nonEmpty && rows.exists(_.getLong(1) > 0))
+      rows.foreach(r => assert(r.getLong(1) == r.getLong(2), s"doc ${r.getLong(0)}"))
+    } finally {
+      spark.conf.set("spark.sql.codegen.fallback", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
+
   test("SimHashText compiles into a WholeStageCodegen span") {
     val docs = Tables.df(spark, sfDir, "documents")
     val sigOnly = docs.select(

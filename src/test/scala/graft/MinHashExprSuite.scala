@@ -68,6 +68,52 @@ class MinHashExprSuite extends SparkSpec {
     }
   }
 
+  test("SortedIntersectCount equals size(array_intersect) on ascending distinct sets") {
+    import org.apache.spark.sql.graftshim.{GraftHash, Shim, SortedIntersectCount}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import spark.implicits._
+    val rnd = new scala.util.Random(20080421L)
+    def set(n: Int, lo: Long, span: Long): Seq[Long] =
+      Seq.fill(n)(lo + (rnd.nextDouble() * span).toLong).distinct.sorted
+    val edge = Seq(
+      Seq.empty[Long] -> Seq.empty[Long],          // empty, both sides
+      Seq.empty[Long] -> Seq(1L, 2L),              // empty, one side
+      Seq(1L, 3L, 5L) -> Seq(2L, 4L, 6L),          // disjoint, interleaved
+      Seq(1L, 2L, 3L) -> Seq(10L, 20L),            // disjoint ranges
+      Seq(-7L, 0L, 9L) -> Seq(-7L, 0L, 9L),        // identical
+      Seq(42L) -> Seq(42L),                        // one element, equal
+      Seq(42L) -> Seq(43L),                        // one element, differ
+      Seq(-9L, -3L, -1L, 4L) -> Seq(-3L, 4L, 8L),  // negatives
+      Seq(Long.MinValue, 0L, Long.MaxValue) -> Seq(Long.MinValue, Long.MaxValue))
+    // small value ranges force overlap; a wide one (negative to positive
+    // 48-bit) matches the shingle-hash shape, mostly disjoint
+    val random = (0 until 300).map { i =>
+      val (lo, span) = if (i % 3 == 0) (-(1L << 47), 1L << 48) else (-30L, 60L)
+      set(rnd.nextInt(40), lo, span) -> set(rnd.nextInt(40), lo, span)
+    }
+    val cases = edge ++ random
+    cases.foreach { case (a, b) =>
+      assert(GraftHash.sortedIntersectCount(new GenericArrayData(a.toArray),
+        new GenericArrayData(b.toArray)) == a.intersect(b).size.toLong, s"$a ∩ $b")
+    }
+    val df = cases.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("i", "a", "b")
+    def kernel(a: String, b: String) = Shim.toColumn(SortedIntersectCount(
+      Shim.toExpression(col(a)), Shim.toExpression(col(b))))
+    // local relation: interpreted (folded at optimization time); after a
+    // shuffle: the generated code
+    Seq(df, df.repartition(3)).foreach { in =>
+      val rows = in.select(col("i"), kernel("a", "b"),
+        size(array_intersect(col("a"), col("b"))).cast("long")).collect()
+      assert(rows.length == cases.length)
+      rows.foreach(r => assert(r.getLong(1) == r.getLong(2), s"case ${r.getInt(0)}"))
+    }
+    val nulls = Seq[(Option[Seq[Long]], Option[Seq[Long]])](
+      (Some(Seq(1L)), None), (None, Some(Seq(1L))), (None, None)).toDF("a", "b")
+    Seq(nulls, nulls.repartition(2)).foreach { in =>
+      assert(in.select(kernel("a", "b")).collect().forall(_.isNullAt(0)))
+    }
+  }
+
   private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
     val conf = spark.conf
     val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }

@@ -411,6 +411,33 @@ class PipelineOpsSuite extends SparkSpec {
     assert(ab == self, s"missing=${(self -- ab).take(5)} extra=${(ab -- self).take(5)}")
   }
 
+  test("jaccardSimilarityJoinAB: ids shared by both sides stay apart") {
+    // doc_id 1 is on both sides with different (near-duplicate) texts.
+    // Pooling the sides' shingles under one id changes the counts, and
+    // a verify lookup by id alone matches both sides' rows for id 1 —
+    // rows that pass the threshold too, so they show up as extra pairs
+    import org.apache.spark.sql.graftshim.{DistinctShingleHashes, Shim}
+    val x = (0 until 24).map(i => s"x$i").mkString(" ")
+    val y = (0 until 24).map(i => s"y$i").mkString(" ")
+    val left = toDf(spark)("doc_id" -> Seq(1L, 2L),
+      "text" -> Seq(x, y)).df
+    val right = toDf(spark)("doc_id" -> Seq(1L, 3L, 4L),
+      "text" -> Seq(x + " extra", x + " more words", y + " tail")).df
+    def sets(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
+      Shim.toColumn(DistinctShingleHashes(Shim.toExpression(col("text")), 3)))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet)
+    val naive = for {
+      (a, sa) <- sets(left); (b, sb) <- sets(right)
+      inter = (sa & sb).size.toLong; uni = (sa | sb).size.toLong
+      if inter * 100 >= 50 * uni
+    } yield (a, b, inter, uni)
+    val got = Dedup.jaccardSimilarityJoinAB(left, right, "text", "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(naive.map(t => (t._1, t._2)).toSet == Set((1L, 1L), (1L, 3L), (2L, 4L)))
+    assert(got.toSet == naive.toSet && got.length == naive.length,
+      s"got ${got.toSeq} want ${naive.toSeq}")
+  }
+
   test("jaccardSimilarityJoin: identical docs and sub-threshold docs behave") {
     val base = (0 until 30).map(i => s"tok$i").mkString(" ")
     val df = toDf(spark)(
