@@ -42,6 +42,9 @@ object BenchFormat {
            extra: String = ""): String = {
     val warmTotal = results.map(_._2._2).filter(_ >= 0).sum
     val coldTotal = results.map(_._2._1).filter(_ >= 0).sum
+    // counted explicitly: past maxShown failed entries would otherwise
+    // hide inside "rest", whose sum leaves them out
+    val failed = results.count(_._2._2 < 0)
     // failed queries (-1) sort to the very front so they are always shown
     val bySlow = results.sortBy { case (_, (_, w)) => if (w < 0) Double.MinValue else -w }
     def mk(k: Int): String = {
@@ -57,7 +60,7 @@ object BenchFormat {
       val note =
         if (rest.isEmpty) "warm=min3; total=cold run1 (r1-r4 series)"
         else s"warm=min3; slowest $k of ${results.size} shown; total=cold run1 (r1-r4 series)"
-      s"""{"metric":"total_warm","value":${fmt(warmTotal, 3)},"unit":"sec","queries":$qs$restPart,"total":${fmt(coldTotal, 3)},"sf":"$sfDir"$extra,"note":"$note"}"""
+      s"""{"metric":"total_warm","value":${fmt(warmTotal, 3)},"unit":"sec","queries":$qs$restPart,"total":${fmt(coldTotal, 3)},"failed":$failed,"sf":"$sfDir"$extra,"note":"$note"}"""
     }
     // k=0 is a ~170-char floor; if the budget is below even that, emit
     // the k=0 line anyway (an over-budget line beats an exception)

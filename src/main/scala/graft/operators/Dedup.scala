@@ -1467,11 +1467,14 @@ object Dedup {
       .drop("component")
   }
 
-  private def requireIntegralId(df: DataFrame, idCol: String): Unit = {
+  /** Fails loudly on a non-integral id column: a `cast("long")` of a
+    * string or double id would turn ids into nulls (or merge them) and
+    * quietly return an empty or wrong result. Shared with the ANN ops. */
+  private[operators] def requireIntegralId(df: DataFrame, idCol: String): Unit = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val dt = df.schema(idCol).dataType
     require(dt == LongType || dt == IntegerType,
-      s"cluster ops need an integral id column; '$idCol' is ${dt.simpleString}")
+      s"cluster and ANN ops need an integral id column; '$idCol' is ${dt.simpleString}")
   }
 
   /** The `(id, component)` label frame behind [[clusterByPairs]]: every

@@ -141,10 +141,10 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, anchors: DataFrame,
                     vecCol: String, idCol: String, labelCol: String,
                     k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
+    val c = corpus.select(longId(corpus, idCol).as("vec_id"), col(vecCol).as("cv"),
       col(labelCol).as("__cl"))
       .withColumn("__cn", sqrt(dot(col("cv"), col("cv"))))
-    val a = anchors.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+    val a = anchors.select(longId(anchors, idCol).as("query_id"), col(vecCol).as("qv"),
       col(labelCol).as("__al"))
       .withColumn("__qn", sqrt(dot(col("qv"), col("qv"))))
     val scored = c.join(broadcast(a), col("__cl") =!= col("__al"))
@@ -356,8 +356,15 @@ object Similarity {
   }
 
   private def normalized(corpus: DataFrame, vecCol: String, idCol: String) =
-    corpus.select(col(idCol).cast("long").as("vec_id"),
+    corpus.select(longId(corpus, idCol).as("vec_id"),
       toDoubleArray(col(vecCol)).as("v"))
+
+  /** The id projection of every ANN op: an integral id column widened to
+    * long (a non-integral one fails here rather than casting to nulls). */
+  private def longId(df: DataFrame, idCol: String): Column = {
+    Dedup.requireIntegralId(df, idCol)
+    col(idCol).cast("long")
+  }
 
   /** Cell assignment as a pure projection against literal centroids
     * (the [[cellCosArr]] hoisted-norm FLOP shape — at the SemDeDup k=64
@@ -383,9 +390,12 @@ object Similarity {
     // identical logical plan); unpinned, every scan re-read the parquet
     // and re-ran the toDoubleArray projection
     PlanCache.pinned(e)
+    // at most k rows come back: sort them on the driver rather than run
+    // a range sort (a sampling job plus a shuffle job) before the collect
     var cents: Seq[(Long, Array[Double])] =
-      e.filter(col("vec_id") < k).orderBy("vec_id")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      e.filter(col("vec_id") < k)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toSeq
     require(cents.nonEmpty,
       s"kmeansAssign: no seed vectors with id < $k — ids must start near 0 " +
         "(deterministic seeding keys on the k smallest ids)")
@@ -400,8 +410,8 @@ object Similarity {
       cents = elems.groupBy("cell")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
           x => x.getField("cval")).as("cv"))
-        .orderBy("cell")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toSeq
     }
     cents
   }
@@ -443,8 +453,8 @@ object Similarity {
       s"pqCodebooks: dim=$dim must split evenly into m=$m subspaces")
     val d = dim / m
     PlanCache.pinned(e) // the lloyd rule: seeds + one scan per round
-    val seeds = e.filter(col("vec_id") < ncode).orderBy("vec_id")
-      .collect().map(_.getSeq[Double](1).toArray)
+    val seeds = e.filter(col("vec_id") < ncode) // driver sort: the lloyd rule
+      .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     require(seeds.nonEmpty,
       s"pqCodebooks: no seed vectors with id < $ncode — ids must start " +
         "near 0 (deterministic seeding keys on the ncode smallest ids)")

@@ -68,6 +68,25 @@ class BenchFormatSuite extends AnyFunSuite {
     assert(node.get("queries").get("q_failed_one").asInt() == -1)
   }
 
+  test("failures past maxShown stay counted in an explicit failed field") {
+    // 45 failed of 120: at most 40 entries are shown inline, so at least
+    // five failures fall into "rest" — the count must still report all 45
+    val results = mkResults(120).zipWithIndex.map { case ((n, t), i) =>
+      if (i % 2 == 1 && i < 90) n -> (-1.0, -1.0) else n -> t }
+    assert(results.count(_._2._2 < 0) == 45)
+    val node = mapper.readTree(BenchFormat.line(results, "/sf"))
+    assert(node.get("failed").asInt() == 45)
+    val qs = node.get("queries")
+    assert(qs.size() <= 40)
+    var shownFailed = 0
+    val it = qs.fieldNames()
+    while (it.hasNext) if (qs.get(it.next()).asDouble() < 0) shownFailed += 1
+    assert(shownFailed == qs.size(), "failed entries sort to the front")
+    assert(node.get("rest").get("n").asInt() == 120 - qs.size())
+    // a clean run reports zero
+    assert(mapper.readTree(BenchFormat.line(mkResults(20), "/sf")).get("failed").asInt() == 0)
+  }
+
   test("pathological budget still terminates, keeping only what fits") {
     val line = BenchFormat.line(mkResults(120), "/sf", budget = 300)
     assert(line.length <= 300)

@@ -278,4 +278,23 @@ class HardNegativesSuite extends SparkSpec {
     val mean = ratio.sum / ratio.length
     assert(mean > 0.2 && mean < 0.5, s"norm-ratio mean $mean drifted from 1/3")
   }
+
+  test("a string id column fails loudly, naming the column") {
+    // before the check, cast("long") turned "a"/"b" into null ids and the
+    // ops returned an empty result instead of an error
+    val strIds = spark.sql(
+      """SELECT * FROM VALUES
+        |  ('a', array(1.0F, 0.0F), 0),
+        |  ('b', array(0.0F, 1.0F), 1)
+        |AS t(vec_id, embedding, label)""".stripMargin)
+    val ops: Seq[() => Any] = Seq(
+      () => Similarity.pqCodebooks(strIds, "embedding", "vec_id", dim = 2, m = 1, ncode = 2),
+      () => Similarity.bruteForceTopK(strIds, strIds, "embedding", "vec_id", "vec_id", 1),
+      () => Similarity.hardNegatives(strIds, strIds, "embedding", "vec_id", "label", 1))
+    ops.foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("'vec_id'") && e.getMessage.contains("string"),
+        e.getMessage)
+    }
+  }
 }
