@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench a subset of queries by name (iteration tool):
   * `runMain graft.BenchOne q_minhash_pairs q_lang_id`. Same session
   * config and noop sink as [[Bench]].
@@ -30,15 +28,8 @@ object BenchOne {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus, shufflePartitions = cpus, logLevel = "WARN")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     def shot(name: String): Double = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the FORMATTED physical plan of named ledger queries —
   * the `.explain`-and-iterate loop the plan audit (PLANS.md) runs on,
@@ -12,15 +11,8 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ExplainQuery <sfDir> <query> [query ...]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.envCpus(4)
+    val spark = GraftSession.local(cpus, shufflePartitions = cpus, logLevel = "ERROR")
     args.drop(1).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name' — see SparkEntry.queries"))

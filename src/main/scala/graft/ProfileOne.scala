@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (guide §1): per-JOB wall-clock breakdown of one ledger query —
   * shows where a multi-job query (training collects, probe scans, final
@@ -13,15 +12,8 @@ import org.apache.spark.sql.SparkSession
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus, shufflePartitions = cpus, logLevel = "WARN")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Seq[Int])]()

@@ -69,7 +69,7 @@ private[graft] object QueriesVector {
 
       // hard-negative mining: per anchor, top-k cosine among DIFFERENT-
       // label vectors (contrastive-training prep; broadcast anchors +
-      // bounded per-partition heaps — Similarity.hardNegatives scaladoc)
+      // a bounded top-N aggregate — Similarity.hardNegatives scaladoc)
       "q_hard_negatives" -> ((s: SparkSession, dir: String) => {
         val emb = Tables.df(s, dir, "embeddings")
         graft.api.DataTable(
@@ -505,7 +505,7 @@ private[graft] object QueriesVector {
         |      ROW_NUMBER() OVER (PARTITION BY query_id
         |        ORDER BY cos DESC, match_id) AS rn
         |    -- NOT isnan: a zero-norm right-side vector scores NaN, which
-        |    -- DuckDB orders GREATEST while Spark's partitionTopK drops it
+        |    -- DuckDB orders GREATEST while Spark's Similarity.topK drops it
         |    -- — exclude explicitly so both engines agree on any corpus
         |    FROM s WHERE cos >= 0.2 AND NOT isnan(cos)) WHERE rn = 1)
         |SELECT l.vec_id, b.match_id, b.cos AS match_cos

@@ -41,15 +41,8 @@ object ScaleCheck {
                                hitBrute: Long, storeSeamMismatch: Long)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.local(cpus, shufflePartitions = cpus, logLevel = "WARN")
     args(0) match {
       case "winnow_cc" =>
         val r = winnowCc(spark, args(1))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize a 10x scale point from sf0.1 for the slope
@@ -111,14 +111,9 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ScaleUp <srcSfDir> <outDir>")
     val (src, out) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions whatever the core count
+    val spark = GraftSession.local(GraftSession.envCpus(32),
+      shufflePartitions = 32, logLevel = "WARN")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
 

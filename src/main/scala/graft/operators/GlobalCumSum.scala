@@ -50,10 +50,14 @@ object GlobalCumSum {
   private[operators] final case class Stats(rows: Long, sum: Long, min: Long)
 
   /** [[withGlobalCumSum]] plus the pass-1 [[Stats]] — saves the caller
-    * one full input scan. */
+    * one full input scan. `refuseTies = Some((op, why))` makes pass 2
+    * fail on a tied order tuple, naming it ([[RangeBuckets.refuseTies]]):
+    * for a caller whose contract needs a unique order, where the RANGE
+    * frame would otherwise quietly give tied rows one shared sum. */
   private[operators] def withGlobalCumSumStats(
       df: DataFrame, value: Column, order: Seq[Column],
-      name: String = "cum"): (DataFrame, Stats) = {
+      name: String = "cum",
+      refuseTies: Option[(String, String)] = None): (DataFrame, Stats) = {
     require(order.nonEmpty, "withGlobalCumSum: need at least one order column")
     val reserved = Seq("__pid", "__cv") ++ order.indices.map(i => s"__ok$i")
     val clash = df.columns.toSet.intersect(reserved.toSet)
@@ -87,8 +91,10 @@ object GlobalCumSum {
 
     // pass 2: parallel within-bucket window + broadcast offset
     val w = Window.partitionBy("__pid").orderBy(okNames.map(col): _*)
+    val cum = (off + sum(col("__cv")).over(w)).cast("long")
     (parted
-      .withColumn(name, (off + sum(col("__cv")).over(w)).cast("long"))
+      .withColumn(name, refuseTies.fold(cum) { case (op, why) =>
+        RangeBuckets.refuseTies(op, why, w, okNames.map(col), cum) })
       .drop(okNames :+ "__pid" :+ "__cv": _*), facts)
   }
 }

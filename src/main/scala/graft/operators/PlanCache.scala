@@ -56,8 +56,9 @@ object PlanCache {
   }
 }
 
-/** The one harness entry point: Bench/BenchOne/Verify/ExplainQuery call
-  * this between queries to release every [[PlanCache]] pin. HARNESS-ONLY:
+/** The one harness entry point: Bench, BenchOne, ProfileOne, Verify,
+  * ExplainQuery and the perfbench harness call this between queries to
+  * release every [[PlanCache]] pin. HARNESS-ONLY:
   * safe for a caller that owns every in-flight query. */
 object GlobalOps {
   def releaseSnapshots(): Int = PlanCache.releaseAll()

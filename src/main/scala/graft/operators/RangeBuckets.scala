@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.DoubleType
@@ -109,6 +110,21 @@ private[graft] object RangeBuckets {
       lit(s"$op: bucket misalignment between pass 1 and pass 2 (input not " +
         "deterministic upstream), pid="), col("__pid").cast("string"))))
       .otherwise(raw)
+  }
+
+  /** `value`, or a failure naming the tuple on a row whose order tuple
+    * equals its predecessor's under the pass-2 window `w`: equal tuples
+    * share a bucket, so this finds every tie and reuses the pass-2 sort.
+    * Per key, not as one struct: a lag(struct) input is projected below
+    * the exchange and would shuffle every order key twice. */
+  def refuseTies(op: String, why: String, w: WindowSpec, okCols: Seq[Column],
+                 value: Column): Column = {
+    val tied = okCols.map(k => lag(k, 1).over(w) <=> k)
+      .foldLeft(row_number().over(w) > 1)(_ && _)
+    when(tied, raise_error(concat(
+      lit(s"$op: order is not a unique total order, duplicate order tuple "),
+      struct(okCols: _*).cast("string"), lit(s" — $why"))))
+      .otherwise(value)
   }
 
   /** The sizing rule the sf10 rehearsal measured (PLANS r19 triage): each

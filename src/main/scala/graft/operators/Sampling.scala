@@ -85,9 +85,9 @@ object Sampling {
     * order — under the window's RANGE frame a tie group shares one
     * cumulative value, so tied rows would each claim the whole group
     * interval and the copies would over-count. Uniqueness is therefore
-    * a correctness precondition (the corpus id contract), not a style
-    * rule; the suite pins both the exact-N total and the duplicate-id
-    * failure shape.
+    * a correctness precondition (the corpus id contract), enforced: a
+    * duplicate id fails pass 2 loudly, naming the id (the GlobalShift
+    * rule, [[RangeBuckets.refuseTies]]).
     *
     * Returns (idCol, n_copies) for rows with n_copies ≥ 1. Requires
     * 2·totalN·W < 2^63 (rescale weights at larger scale — integral
@@ -116,8 +116,12 @@ object Sampling {
     val wLong = coalesce(col(weightCol).cast("long"), lit(0L))
     // W, min-weight, and emptiness all ride GlobalCumSum's pass-1
     // stats rows — no separate whole-table aggregate scan
+    // a tied id shares one RANGE-frame cum, which loses interval ends
+    // and breaks the exact-N draw — refused loudly in pass 2
     val (cum, stats) = GlobalCumSum.withGlobalCumSumStats(
-      df, wLong, Seq(col(idCol)), name = "__cum")
+      df, wLong, Seq(col(idCol)), name = "__cum",
+      refuseTies = Some(("systematicResample",
+        "duplicate ids break the exact-N draw; make the id column unique")))
     if (stats.rows == 0L)
       return cum.select(col(idCol), lit(null).cast("long").as("n_copies"))
     val totW = stats.sum

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CollectTopN
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions._
 
@@ -17,83 +18,38 @@ import graft.functions.VectorFunctions._
   *     the query's bucket (and optional neighboring probes) are scored.
   *     At 100 TB the bucket join prunes the scan to ~corpus/2^k per probe.
   *
-  * Top-k shape: a bounded per-partition heap prunes each partition to at
-  * most k rows per query BEFORE any shuffle, so the final exact window
-  * ranks ≤ k × numPartitions rows per query — no stage ever funnels the
-  * whole scored corpus through a single partition (the naive
-  * `row_number over partitionBy(query_id)` does exactly that and dies at
-  * 1000 executors).
+  * Top-k shape: every path ends in one bounded top-N aggregate per
+  * query ([[topK]], [[org.apache.spark.sql.graftshim.CollectTopN]]).
+  * Its partial runs map-side, so each map task ships at most k rows per
+  * query and the final merge sees ≤ k × map tasks rows per query — no
+  * stage funnels the whole scored corpus through a single partition or
+  * sorts it (the naive `row_number over partitionBy(query_id)` does
+  * both).
   */
 object Similarity {
 
-  private val prunedSchema = StructType(Seq(
-    StructField("query_id", LongType), StructField("vec_id", LongType),
-    StructField("cos", DoubleType)))
-
-  /** Per-partition top-k prune: keeps, per query, the k best (cos desc,
-    * vec_id asc) rows of each partition, deduplicating (query, vec) within
-    * the partition. Exact-preserving: the global top-k distinct rows are a
-    * subset of the union of per-partition top-k distinct rows. Input
-    * columns must be (query_id: long, vec_id: long, cos: double).
+  /** Exact top-k per query over scored `(query_id, vec_id, cos)` rows:
+    * the `k` best DISTINCT `(cos desc, vec_id asc)` neighbors of each
+    * query as `(query_id: long, vec_id: long, cos: double, rank: int)`.
+    * One [[CollectTopN]] aggregate per query, merged map-side, so each
+    * map task ships at most `k` rows per query and a multi-probe
+    * duplicate (same vec_id, same cos) is kept once.
     *
-    * Memory is bounded at O(queries-in-partition × k): the dedup set per
-    * query tracks only the vec_ids CURRENTLY in that query's heap (a
-    * multi-probe duplicate carries an identical cos, so rejecting it
-    * against an in-heap copy loses nothing, and a duplicate of an
-    * already-evicted row is simply re-adjudicated by the heap order — it
-    * loses again). An unbounded all-pairs `seen` set would grow linearly
-    * with scored rows, the exact per-partition blow-up this prune exists
-    * to prevent. */
-  private def partitionTopK(scored: DataFrame, k: Int): DataFrame = {
-    implicit val enc = Encoders.row(prunedSchema)
-    val ord = Ordering.by[(Long, Double), (Double, Long)] {
-      case (id, cos) => (-cos, id) // best = smallest (-cos, id)
-    }
-    scored.select(col("query_id").cast("long"), col("vec_id").cast("long"),
-        col("cos").cast("double"))
-      // malformed vectors score NULL and zero-norm vectors score NaN —
-      // neither is a usable neighbor, and letting NaN through would rank
-      // FIRST in the final desc window (Spark's NaN-greatest order)
-      // while the heap ordering treats it as worst: exclude both here so
-      // every downstream ranking agrees. Oracle parity note: the DuckDB
-      // replays rank NaN first too, so ANN oracles assume a corpus
-      // without zero-norm embeddings (testdata satisfies this).
+    * Malformed vectors score NULL and zero-norm vectors score NaN —
+    * neither is a usable neighbor, and NaN would rank FIRST under
+    * Spark's NaN-greatest order, so both are excluded. Oracle parity
+    * note: the DuckDB replays rank NaN first too, so ANN oracles assume
+    * a corpus without zero-norm embeddings (testdata satisfies this). */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.select(col("query_id").cast("long").as("query_id"),
+        col("vec_id").cast("long").as("vec_id"), col("cos").cast("double").as("cos"))
       .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .mapPartitions { it =>
-        // per query: max-heap on (-cos, id) (root = WORST retained row)
-        // plus the set of vec_ids currently in that heap
-        val heaps = scala.collection.mutable.HashMap.empty[Long,
-          (scala.collection.mutable.PriorityQueue[(Long, Double)],
-           scala.collection.mutable.HashSet[Long])]
-        it.foreach { r =>
-          val (q, v, c) = (r.getLong(0), r.getLong(1), r.getDouble(2))
-          val (h, ids) = heaps.getOrElseUpdate(q,
-            (scala.collection.mutable.PriorityQueue.empty[(Long, Double)](ord),
-             scala.collection.mutable.HashSet.empty[Long]))
-          if (!ids.contains(v)) {
-            if (h.size < k) { h.enqueue((v, c)); ids += v }
-            else if (ord.lt((v, c), h.head)) {
-              ids -= h.dequeue()._1
-              h.enqueue((v, c)); ids += v
-            }
-          }
-        }
-        heaps.iterator.flatMap { case (q, (h, _)) =>
-          h.iterator.map { case (v, c) => Row(q, v, c) }
-        }
-      }
-  }
-
-  /** Exact final ranking over the (tiny) pruned set. */
-  private def rankTopK(pruned: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    pruned
-      .dropDuplicates("query_id", "vec_id") // cross-partition dups (multi-probe)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
-  }
+      .groupBy(col("query_id"))
+      .agg(CollectTopN.column(struct(col("cos"), col("vec_id")), k,
+        Descending, Ascending).as("__top"))
+      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__t")))
+      .select(col("query_id"), col("__t.vec_id").as("vec_id"),
+        col("__t.cos").as("cos"), (col("__pos") + 1).as("rank"))
 
   /** Exact top-k by cosine for each query row. `queries` is expected to be
     * small (it is broadcast); the corpus is streamed, never collected.
@@ -122,7 +78,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("__cn") * col("__qn")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 
   /** Hard-negative mining for contrastive training data (the in-batch /
@@ -131,9 +87,9 @@ object Similarity {
     * DIFFERENT label — the near-miss negatives that make a contrastive
     * objective informative. Same scale shape as [[bruteForceTopK]]: the
     * anchor set is broadcast (never the corpus), the label-inequality
-    * predicate rides the broadcast join, and the per-partition bounded
-    * heap prunes each partition to ≤ k rows per anchor before the one
-    * final shuffle — no stage funnels the scored corpus through a single
+    * predicate rides the broadcast join, and the map-side top-N partial
+    * keeps ≤ k rows per anchor and map task before the one final
+    * shuffle — no stage funnels the scored corpus through a single
     * partition. Null labels are excluded from BOTH sides (`=!=`
     * null-propagates, matching SQL `<>`). Self-pairs need no extra
     * guard: an anchor shares its own label. Returns (query_id, vec_id,
@@ -150,7 +106,7 @@ object Similarity {
     val scored = c.join(broadcast(a), col("__cl") =!= col("__al"))
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("__cn") * col("__qn")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 
   /** 1-based positional cosine-argmax cell of `v` against literal
@@ -224,7 +180,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("__cn") * col("__qn")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 
   /** Lloyd's k-means over the embedding column (spherical: cosine
@@ -525,8 +481,8 @@ object Similarity {
     * (a literal-array lookup projection — the scan reads only the m
     * codes, never the raw vectors) and scored against the exact query
     * vector by cosine. Same top-k shape as [[bruteForceTopK]]: broadcast
-    * queries, per-partition bounded heaps, one final shuffle of
-    * ≤ k × partitions rows per query.
+    * queries, a map-side top-N partial, one final shuffle of
+    * ≤ k × map tasks rows per query.
     *
     * Production folds the per-query codeword dot products into an
     * m×ncode lookup table (m adds per pair instead of dim multiplies);
@@ -550,7 +506,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("rv"), col("qv")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 
   /** Codeword reconstruction of a PQ code array: per subspace, a literal
@@ -594,7 +550,7 @@ object Similarity {
     * costs to score (m codes instead of the raw vector). Per candidate
     * the scored vector is `centroid(cell) + decode(codes)`; everything
     * up to the probe join is a pure projection, and the top-k keeps the
-    * bounded-heap shape of [[bruteForceTopK]]. At 100 TB: the scan reads
+    * bounded top-N shape of [[bruteForceTopK]]. At 100 TB: the scan reads
     * m bytes per vector, the probe prunes to ~corpus × nprobe / nlist,
     * and no stage funnels the corpus through one partition. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
@@ -615,7 +571,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("fv"), col("qv")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 
   /** Johnson-Lindenstrauss random projection: `outDim` deterministic
@@ -650,8 +606,8 @@ object Similarity {
     *
     * Scale shape: LEFT is the broadcast side (the probe set — catalogs,
     * queries, label sets are small by nature); the right/corpus side
-    * streams through the bounded per-partition heap at k=1, so the
-    * final shuffle carries ≤ partitions rows per left row. */
+    * streams through the bounded top-N aggregate at k=1, so the final
+    * shuffle carries ≤ map tasks rows per left row. */
   def semanticJoin(left: DataFrame, right: DataFrame, vecCol: String,
                    leftIdCol: String, rightIdCol: String,
                    minCos: Double = 0.5): DataFrame = {
@@ -665,7 +621,7 @@ object Similarity {
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("__cn") * col("__qn")))
       .filter(col("cos") >= lit(minCos))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    val best = rankTopK(partitionTopK(scored, 1), 1)
+    val best = topK(scored, 1)
       .select(col("query_id"), col("vec_id").as("match_id"),
         col("cos").as("match_cos"))
     left.select(col(leftIdCol).cast("long").as(leftIdCol))
@@ -1013,7 +969,7 @@ object Similarity {
     * per component as `lo + code·step` (step = (hi−lo)/255, a literal)
     * and scored by cosine against the exact query vectors — the
     * [[pqTopK]] ADC shape at SQ8's finer-but-larger compression point.
-    * Broadcast queries, bounded per-partition heaps; the scan reads one
+    * Broadcast queries, a bounded top-N aggregate; the scan reads one
     * byte per component at production storage. */
   def sqTopK(corpus: DataFrame, queries: DataFrame,
              lo: Array[Double], hi: Array[Double],
@@ -1034,15 +990,15 @@ object Similarity {
     val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("rv"), col("qv")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 
   /** LSH-bucketed ANN: corpus and queries are bucketed by sign-bit
     * hyperplane hash; candidates share the bucket (multi-probe: flip up to
     * `probeBits` of the query's bits). Recall is tunable via plane count
     * and probes; scoring cost drops from |corpus| to the bucket sizes.
-    * Multi-probe duplicates are pruned per partition and finally on the
-    * pruned set — no extra full shuffle. */
+    * A vector reached by several probes is scored once per probe; the
+    * top-N aggregate keeps it once — no extra full shuffle. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               vecCol: String, idCol: String, queryIdCol: String,
               k: Int, dim: Int, numPlanes: Int = 8,
@@ -1068,6 +1024,6 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("__cn") * col("__qn")))
       .select(col("query_id"), col("vec_id"), col("cos"))
-    rankTopK(partitionTopK(scored, k), k)
+    topK(scored, k)
   }
 }

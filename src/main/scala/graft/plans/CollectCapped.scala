@@ -5,12 +5,15 @@ package org.apache.spark.sql.graftshim
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.Collect
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateNamedStruct,
+  Expression, GenericInternalRow, InterpretedOrdering, Literal, SortDirection,
+  SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Collect, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** `collect_list` with a hard element cap enforced INSIDE the
   * aggregation buffer — the scale-safe bucket builder for every
@@ -89,4 +92,143 @@ case class CollectListCapped(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): CollectListCapped =
     copy(child = newChild)
+}
+
+/** The best `k` rows of each group: the engine's one bounded top-N
+  * aggregate, behind the ANN top-K ([[graft.operators.Similarity]]) and
+  * the global-shift boundary strips ([[graft.operators.GlobalShift]]).
+  *
+  * `child` is a struct whose leading `directions.size` fields are the
+  * key, ordered by Spark's own [[InterpretedOrdering]] (ASC NULLS FIRST
+  * or DESC NULLS LAST, for every orderable type); later fields ride
+  * along. The result holds the structs best first, each key once (which
+  * of several equal-key rows survives is unspecified). Null structs are
+  * skipped.
+  *
+  * Bounded at every point of the plan, like [[CollectListCapped]]: a
+  * buffer holds at most 2k rows and compacts (sort, de-duplicate, cut to
+  * k) when full. A row no better than the compacted k-th is rejected
+  * before it is copied — for a `struct(...)` child, before the struct is
+  * built. Partials merge map-side and ship at most k sorted rows. */
+case class CollectTopN(
+    child: Expression,
+    k: Int,
+    directions: Seq[SortDirection],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[CollectTopN.Buffer] with UnaryLike[Expression] {
+
+  require(k >= 1 && directions.nonEmpty, s"graft_collect_top_n: need k >= 1 and a key, got $k")
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(child.dataType, containsNull = false)
+  override def defaultResult: Option[Literal] = Option(Literal.create(Array(), dataType))
+  override def prettyName: String = "graft_collect_top_n"
+
+  private def fields = child.dataType.asInstanceOf[StructType].fields
+
+  /** Reads only the leading key fields, so it orders full structs and
+    * key-only probe rows alike. */
+  @transient private lazy val ordering: Ordering[InternalRow] = new InterpretedOrdering(
+    directions.zipWithIndex.map { case (d, i) =>
+      SortOrder(BoundReference(i, fields(i).dataType, fields(i).nullable), d) })
+
+  /** For a `struct(...)` child: the key expressions, evaluated into
+    * `probe` to judge a row before its struct is built. */
+  @transient private lazy val keyExprs: Array[Expression] = child match {
+    case s: CreateNamedStruct => s.valExprs.take(directions.size).toArray
+    case _ => Array.empty
+  }
+  @transient private lazy val probe = new GenericInternalRow(directions.size)
+
+  override def createAggregationBuffer(): CollectTopN.Buffer =
+    new CollectTopN.Buffer(k, ordering)
+
+  override def update(buffer: CollectTopN.Buffer, input: InternalRow): CollectTopN.Buffer = {
+    var i = 0
+    while (i < keyExprs.length) { probe.update(i, keyExprs(i).eval(input)); i += 1 }
+    if (keyExprs.isEmpty || buffer.admits(probe)) {
+      val value = child.eval(input)
+      if (value != null) buffer.offer(value.asInstanceOf[InternalRow].copy())
+    }
+    buffer
+  }
+
+  override def merge(buffer: CollectTopN.Buffer, other: CollectTopN.Buffer): CollectTopN.Buffer = {
+    other.sortedRows.foreach(buffer.offer)
+    buffer
+  }
+
+  override def eval(buffer: CollectTopN.Buffer): Any = new GenericArrayData(buffer.sortedRows)
+
+  @transient private lazy val projection = UnsafeProjection.create(Array[DataType](dataType))
+
+  override def serialize(buffer: CollectTopN.Buffer): Array[Byte] =
+    projection.apply(InternalRow(eval(buffer))).getBytes
+
+  override def deserialize(bytes: Array[Byte]): CollectTopN.Buffer = {
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val arr = row.getArray(0)
+    val buffer = createAggregationBuffer()
+    (0 until arr.numElements()).foreach(i => buffer.offer(arr.getStruct(i, fields.length)))
+    buffer
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): CollectTopN =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): CollectTopN =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): CollectTopN =
+    copy(child = newChild)
+}
+
+object CollectTopN {
+
+  /** The best `k` structs of `child` per group, as a DataFrame column. */
+  def column(child: Column, k: Int, directions: SortDirection*): Column =
+    Shim.toColumn(CollectTopN(Shim.toExpression(child), k, directions).toAggregateExpression())
+
+  /** Rows owned by the buffer: a sorted, de-duplicated prefix from the
+    * last compaction, then newcomers that each beat its k-th row `kth`
+    * (null while fewer than k are kept). */
+  final class Buffer(k: Int, ord: Ordering[InternalRow]) {
+    private var rows = new Array[InternalRow](math.min(k, 8))
+    private var n = 0
+    private var sorted = true
+    private var kth: InternalRow = null
+
+    /** Could a row with these leading key fields still be kept? */
+    def admits(key: InternalRow): Boolean = kth == null || ord.compare(key, kth) < 0
+
+    def offer(row: InternalRow): Unit = if (admits(row)) {
+      if (n.toLong >= 2L * k) compact()
+      if (admits(row)) {
+        if (n == rows.length) rows = java.util.Arrays.copyOf(rows,
+          math.min(math.min(n * 2L, 2L * k), Int.MaxValue - 8L).toInt)
+        rows(n) = row
+        n += 1
+        sorted = false
+      }
+    }
+
+    private def compact(): Unit = if (!sorted) {
+      java.util.Arrays.sort(rows, 0, n, ord)
+      var kept = 0
+      for (i <- 0 until n if kept < k && (kept == 0 || ord.compare(rows(i), rows(kept - 1)) != 0)) {
+        rows(kept) = rows(i)
+        kept += 1
+      }
+      java.util.Arrays.fill(rows.asInstanceOf[Array[AnyRef]], kept, n, null)
+      n = kept
+      sorted = true
+      kth = if (n == k) rows(k - 1) else null
+    }
+
+    /** The kept rows, best first. */
+    def sortedRows: Array[InternalRow] = {
+      compact()
+      java.util.Arrays.copyOf(rows, n)
+    }
+  }
 }

@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec,
+  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graftshim.CollectTopN
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.operators.Dedup
@@ -117,16 +124,34 @@ class CodegenSuite extends SparkSpec {
     }
   }
 
-  test("top-k rank filter gets WindowGroupLimit pruning (partial + final)") {
-    // the Similarity top-k path relies on Catalyst's InferWindowGroupLimit
-    // turning `row_number <= k` into partial/final WindowGroupLimit nodes —
-    // without it the final rank window materializes every pruned candidate
+  test("top-k plans a map-side CollectTopN partial below the exchange, no window") {
+    // the Similarity top-k is one bounded aggregate: its partial runs
+    // before the shuffle (≤ k rows per query leave each map task), and
+    // no row-level window, typed mapPartitions or Row decoding remains
+    // the sf0.001 scan is one split, whose single partition needs no
+    // exchange at all: spread the corpus so the final merge is a shuffle
     val emb = Tables.df(spark, sfDir, "embeddings")
     val out = graft.operators.Similarity.bruteForceTopK(
-      corpus = emb, queries = emb.filter(col("vec_id") === 0),
+      corpus = emb.repartition(3), queries = emb.filter(col("vec_id") === 0),
       vecCol = "embedding", idCol = "vec_id", queryIdCol = "vec_id", k = 5)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"), s"no WindowGroupLimit:\n$plan")
+    val plan = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def partialTopN(p: SparkPlan): Boolean = p match {
+      case a: ObjectHashAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[CollectTopN])
+      case _ => false
+    }
+    assert(plan.exists {
+      case e: ShuffleExchangeExec => e.child.exists(partialTopN)
+      case _ => false
+    }, s"no CollectTopN partial below an exchange:\n$plan")
+    assert(plan.find {
+      case _: WindowExec | _: MapPartitionsExec | _: DeserializeToObjectExec => true
+      case _ => false
+    }.isEmpty, s"row-level window or typed operator left in the top-k:\n$plan")
+    assert(out.count() == 5)
   }
 
   test("WinnowText compiles into a WholeStageCodegen span") {

@@ -133,15 +133,21 @@ class GlobalCumSumSuite extends SparkSpec {
 
   test("systematicResample: duplicate ids break the exact-N contract — the documented failure shape") {
     // ties share one RANGE-frame cum, so tied rows all claim the same
-    // interval end: some sub-intervals double-count, the ones before
-    // the tie group's interior boundaries are lost, and the exact-N
-    // guarantee goes with them (direction depends on the grid). The
-    // unique-id precondition is load-bearing; this pins that a
-    // violation is VISIBLE as a wrong total, not silent corruption of
-    // a correct-looking draw.
+    // interval end and the exact-N guarantee is lost. The unique-id
+    // precondition is load-bearing, so a violation fails loudly, naming
+    // the duplicate id, instead of drawing a wrong total
     val dup = Seq((1L, 10L), (1L, 10L), (2L, 10L)).toDF("k", "w")
-    val total = Sampling.systematicResample(dup, "k", "w", 2L)
-      .agg(sum("n_copies")).as[Long].head()
-    assert(total != 2L, s"duplicate-id draw accidentally hit N: $total")
+    val e = intercept[Exception] {
+      Sampling.systematicResample(dup, "k", "w", 2L).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(m => m.contains("systematicResample") &&
+      m.contains("not a unique total order") && m.contains("{1}")), e)
+    // plain cumsum keeps its RANGE-frame tie semantics: no check there
+    val cum = GlobalCumSum.withGlobalCumSum(dup, col("w"), Seq(col("k")))
+      .orderBy("k").select("cum").as[Long].collect().toSeq
+    assert(cum == Seq(20L, 20L, 30L))
   }
 }

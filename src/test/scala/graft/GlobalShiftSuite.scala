@@ -1,6 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import graft.operators.GlobalShift
 
 /** Pins the two-pass global lag/lead (VERDICT r13 #4): exact equality
@@ -197,52 +202,43 @@ class GlobalShiftSuite extends SparkSpec {
     assert(e3.getMessage.contains("output name"), e3.getMessage)
   }
 
-  test("pass-1 bounded tier plans rank-limit windows, not a full-sort strip (r22)") {
-    // the r22 at-scale pass-1 shape: two rank-limit windows + a hash-agg
-    // count, each strip filter directly above its window so Catalyst
-    // inserts WindowGroupLimit (map-side bounded selection) — the
-    // full-data exchange+sort of the exchange-tier strip must be gone
-    GlobalShift.captureStripPlanForTest = true
-    GlobalShift.forceBoundedStripForTest = Some(true)
+  test("pass-1 strip is one top-N aggregate: no Window, no Sort") {
+    // counts, head strips and tail strips all come from ONE aggregate
+    // over __pid (the GlobalRank / GlobalCumSum pass-1 shape); its
+    // partials merge map-side, so no row-level window or sort remains.
+    // Pass 1 runs inside the call, so its plan is caught by a listener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      val out = GlobalShift.withGlobalShifts(frame,
+      GlobalShift.withGlobalShifts(frame,
         Seq(GlobalShift.Shift("prev", col("v"), 2, isLead = false),
           GlobalShift.Shift("next", col("v"), 3, isLead = true)),
         Seq(col("k")))
-      out.write.format("noop").mode("overwrite").save()
-      val plan = GlobalShift.lastStripPlanForTest
-      assert(plan.contains("WindowGroupLimit"),
-        s"strip must plan bounded WindowGroupLimit selection:\n$plan")
-      assert(plan.contains("HashAggregate"),
-        s"per-bucket counts must come from a hash aggregate:\n$plan")
-      // lag strip orders descending — the k-th-from-END selection
-      assert(plan.contains("DESC"),
-        s"tail strip must plan the descending rank-limit window:\n$plan")
-    } finally {
-      GlobalShift.captureStripPlanForTest = false
-      GlobalShift.forceBoundedStripForTest = None
-    }
+      eventually(timeout(Span(20, Seconds))) {
+        assert(plans.asScala.exists(_.contains("graft_collect_top_n")))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val plan = plans.asScala.filter(_.contains("graft_collect_top_n")).mkString("\n")
+    assert(plan.contains("partial_graft_collect_top_n"),
+      s"the strip aggregate must run a map-side partial:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Sort"),
+      s"pass 1 must plan no window and no sort:\n$plan")
   }
 
-  test("pass-1 strip tiers agree: bounded and exchange shapes, identical hand-off") {
-    // the tier rule picks by input size; both shapes must produce the
-    // exact same shifted frame (the bounded tier's descending row_number
-    // k ≡ the exchange tier's ascending index cnt − k + 1)
-    def run(bounded: Boolean) = {
-      GlobalShift.forceBoundedStripForTest = Some(bounded)
-      try {
-        val out = GlobalShift.withGlobalShifts(frame,
-          Seq(GlobalShift.Shift("prev", col("v"), 2, isLead = false, default = -1L),
-            GlobalShift.Shift("next", col("v"), 30, isLead = true)),
-          Seq(col("k")))
-        (got(out, "prev"), got(out, "next"))
-      } finally GlobalShift.forceBoundedStripForTest = None
-    }
-    val (bp, bn) = run(bounded = true)
-    val (ep, en) = run(bounded = false)
-    assert(bp == ep && bn == en, "strip tiers must be value-identical")
-    assert(bp == expectedLag(2).map(_.orElse(Some(-1L))))
-    assert(bn == expectedLead(30))
+  test("lag 2 + lead 30 through the one strip aggregate equals the reference") {
+    // the lead is deeper than a bucket, so its fills chain head strips
+    // of several later buckets
+    val out = GlobalShift.withGlobalShifts(frame,
+      Seq(GlobalShift.Shift("prev", col("v"), 2, isLead = false, default = -1L),
+        GlobalShift.Shift("next", col("v"), 30, isLead = true)),
+      Seq(col("k")))
+    assert(got(out, "prev") == expectedLag(2).map(_.orElse(Some(-1L))))
+    assert(got(out, "next") == expectedLead(30))
   }
 
   test("pass-parity guard trips loudly when pass-2 counts diverge from pass 1") {

@@ -67,6 +67,16 @@ class HardNegativesSuite extends SparkSpec {
     assert(out.map(_.getLong(1)).toSeq == Seq(5L, 6L))
   }
 
+  test("a top-k result minus itself (exceptAll) is empty") {
+    // set operations must resolve over the top-k's output attributes: a
+    // subset dropDuplicates in the top-k plan made exceptAll fail with
+    // INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+    val top = Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") <= 1),
+      "embedding", "vec_id", "vec_id", k = 2)
+    assert(top.count() == 4)
+    assert(top.exceptAll(top).count() == 0)
+  }
+
   test("mmrRerank diversifies: the near-copy loses to the diverse candidate") {
     // query 0 = [1,0]; rel order: 1 (.9138) > 2 (.9100) > 3 (.9085), so
     // plain top-2 keeps the near-copies {1, 2}. But sim(2,1) ~ 1.0 while
