@@ -7,15 +7,13 @@ import org.apache.spark.sql.SparkSession
   * parquet TIMESTAMP(NANOS) read as a nanos-since-epoch long (queries
   * derive timestamps from events.parquet by integer division). */
 object GraftSession {
-  def local(cpus: Int, shufflePartitions: Int, logLevel: String,
-            appName: Option[String] = None): SparkSession = {
-    val builder = SparkSession.builder().master(s"local[$cpus]")
+  def local(cpus: Int, shufflePartitions: Int, logLevel: String): SparkSession = {
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    appName.foreach(builder.appName)
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }

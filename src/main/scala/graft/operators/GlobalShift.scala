@@ -125,10 +125,11 @@ object GlobalShift {
     // pass 1: ONE aggregate, ONE collect, the GlobalRank/GlobalCumSum
     // pass-1 shape: per bucket, its row count and its first maxLead /
     // last maxLag rows as bounded top-N aggregates over the order keys
-    // (shift values as payload), merged map-side — no window, no sort,
-    // no full-data exchange. DESC NULLS LAST is the exact reverse of
-    // pass 2's ASC NULLS FIRST window, so the k-th descending row is the
-    // k-th from the bucket END.
+    // (shift values as payload), merged map-side — no window, no
+    // full-data exchange, and no sort below 128 buckets per map task
+    // (past that, Spark's sort-based fallback; see CollectTopN). DESC
+    // NULLS LAST is the exact reverse of pass 2's ASC NULLS FIRST window,
+    // so the k-th descending row is the k-th from the bucket END.
     //
     // The counts stay load-bearing: (1) they translate "i-th row before
     // the END of a bucket" into the ascending row_number pass 2 computes

@@ -22,9 +22,12 @@ import graft.functions.VectorFunctions._
   * query ([[topK]], [[org.apache.spark.sql.graftshim.CollectTopN]]).
   * Its partial runs map-side, so each map task ships at most k rows per
   * query and the final merge sees ≤ k × map tasks rows per query — no
-  * stage funnels the whole scored corpus through a single partition or
-  * sorts it (the naive `row_number over partitionBy(query_id)` does
-  * both).
+  * stage funnels the whole scored corpus through a single partition
+  * (the naive `row_number over partitionBy(query_id)` does). From 128
+  * queries per map task on, Spark's sort-based fallback sorts the scored
+  * rows by query ([[org.apache.spark.sql.graftshim.CollectTopN]]), and
+  * top-K is then no faster than a per-partition heap
+  * (plans/one_topn/README.md).
   */
 object Similarity {
 

@@ -109,7 +109,12 @@ case class CollectListCapped(
   * buffer holds at most 2k rows and compacts (sort, de-duplicate, cut to
   * k) when full. A row no better than the compacted k-th is rejected
   * before it is copied — for a `struct(...)` child, before the struct is
-  * built. Partials merge map-side and ship at most k sorted rows. */
+  * built. Partials merge map-side and ship at most k sorted rows.
+  * Spark's ObjectHashAggregate holds one buffer per group only until a
+  * task reaches `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+  * groups (128 by default); then it copies every remaining input
+  * row into an external sorter and sorts it by group before `update`
+  * sees it, so the rejection then saves the copy into the buffer only. */
 case class CollectTopN(
     child: Expression,
     k: Int,

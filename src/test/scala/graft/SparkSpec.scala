@@ -54,6 +54,5 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession =
-    GraftSession.local(cpus = 4, shufflePartitions = 4, logLevel = "WARN",
-      appName = Some("graft-tests"))
+    GraftSession.local(cpus = 4, shufflePartitions = 4, logLevel = "WARN")
 }
