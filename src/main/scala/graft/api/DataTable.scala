@@ -560,7 +560,21 @@ final case class DataTable(df: DataFrame, groupKeys: Seq[String] = Nil,
     * arbitrary (single shuffle, fastest); use [[uniqueFirstBy]] for the
     * reference's deterministic keep-first semantics. */
   def unique(cols: String*): DataTable =
-    withDf(if (cols.isEmpty) df.distinct() else df.dropDuplicates(cols))
+    if (cols.isEmpty) withDf(df.distinct())
+    else {
+      // the aggregate Spark rewrites dropDuplicates(cols) to, spelled
+      // out: that rewrite keeps the input attribute ids, and on Spark
+      // 4.1.2 `exceptAll` over its result fails with
+      // INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+      def named(c: String) = col(s"`${c.replace("`", "``")}`")
+      val keys = cols.distinct
+      val rest = df.columns.toSeq.filterNot(keys.contains)
+      val deduped =
+        if (rest.isEmpty) df.select(keys.map(named): _*).distinct()
+        else df.groupBy(keys.map(named): _*).agg(first(named(rest.head)).as(rest.head),
+          rest.tail.map(c => first(named(c)).as(c)): _*)
+      withDf(deduped.select(df.columns.toSeq.map(named): _*))
+    }
 
   /** Distinct by `cols` keeping the first row per key under `order` —
     * the reference's keep-first-occurrence, made explicit for distributed

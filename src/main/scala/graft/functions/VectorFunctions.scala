@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float|double>` columns, built from
-  * higher-order functions (`zip_with` + `aggregate`) — no UDF, no driver
-  * loop; each row's fold runs left-to-right, which keeps results
-  * deterministic across engines and runs.
+/** Dense-vector math over `array<float|double>` columns: codegen'd
+  * kernels (`dot`, `cosine`) and array casts, with `l2Sq` left as a
+  * higher-order fold — no UDF, no driver loop; each row's fold runs
+  * left-to-right, which keeps results deterministic across engines and
+  * runs.
   *
   * Beyond-reference (the reference has no vector columns): this is the
   * foundation for embedding similarity search and near-dup detection over
@@ -14,7 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  def toDoubleArray(a: Column): Column = transform(a, x => x.cast("double"))
+  /** Widens an `array<float|double>` to `array<double>`: one array cast,
+    * the per-element Cast a `transform(a, x -> cast(x as double))` runs,
+    * compiled instead of interpreted. */
+  def toDoubleArray(a: Column): Column = a.cast("array<double>")
 
   /** A constant vector as ONE `Literal` node (`typedlit`) instead of a
     * `CreateArray` over dim `Literal` nodes. The VALUE is identical —

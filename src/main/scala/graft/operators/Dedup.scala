@@ -10,8 +10,9 @@ import graft.functions.VectorFunctions._
   * (the reference's closest verb is row-`unique`, `dataframe.nim:2370-2422`).
   *
   * Every method is a pure DataFrame transform: one shuffle per logical
-  * phase, no driver-side loops, no UDFs — the MinHash/SimHash math is
-  * expressed with higher-order array functions so it runs per-partition.
+  * phase, no driver-side loops, no UDFs — the MinHash/SimHash math and
+  * the in-bucket pair expansion are codegen'd kernels (`plans/`), so
+  * they run per-partition inside whole-stage codegen.
   * Skew guards: LSH bucket sizes are capped (a degenerate bucket of 10⁶
   * identical docs would otherwise produce 10¹² candidate pairs), and the
   * cap is enforced inside the aggregation buffer itself
@@ -235,9 +236,10 @@ object Dedup {
       .drop("__th", "__sh")
   }
 
-  /** Cross-engine band hash: md5-48 of the '_'-joined signature slice. */
+  /** Cross-engine band hash: md5-48 of the '_'-joined signature slice
+    * (one array cast — the per-element long-to-string cast, compiled). */
   private def bandHash(sig: Column, start: Int, rows: Int): Column =
-    hash48(concat_ws("_", transform(slice(sig, start, rows), _.cast("string"))))
+    hash48(concat_ws("_", slice(sig, start, rows).cast("array<string>")))
 
   /** Adds `__bands: array<long>`, the per-band LSH bucket hashes — a pure
     * projection (stateless), so it runs identically on batch tables and
@@ -272,21 +274,24 @@ object Dedup {
       bucketCap: Int, minEstJaccard: Double): DataFrame = {
     val buckets = cappedBuckets(banded, Seq(col("band"), col("bhash")),
       struct(col("id"), col("sig")), bucketCap)
-    // in-bucket pair expansion a<b, then de-dup pairs found in >1 band
-    val pairs = buckets.select(explode(expr(
-      """flatten(transform(members, m1 ->
-        |  filter(transform(members, m2 ->
-        |    if(m1.id < m2.id, struct(m1.id as id_a, m2.id as id_b,
-        |       m1.sig as sig_a, m2.sig as sig_b), null)), p -> p is not null)))"""
-        .stripMargin)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.sig_a"), col("p.sig_b"))
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
-          .cast("double") / lit(k.toDouble))
+    // a pair found in several bands is scored in each and de-duplicated
+    // over fixed-width (id_a, id_b, est) rows: an id carries one
+    // signature, so the score is a function of the pair. The in-batch
+    // screen of minhashIncrementalAgainstBands keeps only id_b, so a
+    // batch id with two texts changes nothing there either.
+    inBucketPairs(buckets)
+      .select(col("id_a"), col("id_b"),
+        (agreement(col("sig_a"), col("sig_b")).cast("double") / lit(k.toDouble))
+          .as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
+      .distinct()
+  }
+
+  /** How many positions of two signatures agree
+    * ([[org.apache.spark.sql.graftshim.PositionalEqualCount]], an int). */
+  private def agreement(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graftshim.{PositionalEqualCount, Shim}
+    Shim.toColumn(new PositionalEqualCount(Shim.toExpression(a), Shim.toExpression(b)))
   }
 
   /** End-to-end near-dup removal: drop every document that is the LARGER
@@ -505,11 +510,12 @@ object Dedup {
         explode_outer(shingleHashes(col(textCol), shingleSize)).as("__h"))
     }.reduce(_ unionByName _).filter(col("__h").isNotNull)
     // rarest-first total order (df, hash) — collect_list order is
-    // nondeterministic, array_sort normalizes both arrays
+    // nondeterministic, sort_array (compiled; the arrays hold no nulls,
+    // so it orders as array_sort) normalizes both arrays
     val index = ex.withColumn("__df", count(lit(1)).over(Window.partitionBy("__h")))
       .groupBy("__side", "id")
-      .agg(array_sort(collect_list(struct(col("__df").as("d"), col("__h").as("h"))))
-        .as("__sw"), array_sort(collect_list(col("__h"))).as("__ss"))
+      .agg(sort_array(collect_list(struct(col("__df").as("d"), col("__h").as("h"))))
+        .as("__sw"), sort_array(collect_list(col("__h"))).as("__ss"))
     // prefix length n − ceil(τn) + 1. LONG arithmetic: a pathological
     // mega-document (the exact input the prefix filter insures against)
     // with > (2^31−100)/tauPct distinct shingles would wrap a 32-bit
@@ -597,9 +603,7 @@ object Dedup {
     val batch = minhashBandRows(newDocs, textCol, idCol, k, bands)
     val losers = buckets.join(broadcast(batch), Seq("band", "bhash"))
       .select(col("id"), col("sig"), explode(col("members")).as("csig"))
-      .withColumn("est",
-        size(filter(zip_with(col("sig"), col("csig"), (x, y) => x === y), b => b))
-          .cast("double") / lit(k.toDouble))
+      .withColumn("est", agreement(col("sig"), col("csig")).cast("double") / lit(k.toDouble))
       .filter(col("est") >= minEstJaccard)
       .select(col("id")).distinct()
     // in-batch greedy rides the ALREADY-BANDED rows (no re-tokenize /
@@ -679,16 +683,12 @@ object Dedup {
                                       bucketCap: Int): DataFrame = {
     val buckets = cappedBuckets(banded, Seq(col("chunk"), col("cval")),
       struct(col("id"), col("sh")), bucketCap)
-    buckets.select(explode(expr(
-      """flatten(transform(members, m1 ->
-        |  filter(transform(members, m2 ->
-        |    if(m1.id < m2.id, struct(m1.id as id_a, m2.id as id_b,
-        |       m1.sh as sh_a, m2.sh as sh_b), null)), p -> p is not null)))"""
-        .stripMargin)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"),
-        bit_count(col("p.sh_a").bitwiseXOR(col("p.sh_b"))).cast("long").as("hamming"))
-      .dropDuplicates("id_a", "id_b")
+    // scored before the de-dup, as in candidatesFromBandRows
+    inBucketPairs(buckets)
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** Incremental SimHash screen — the [[minhashIncrementalAgainstBands]]
@@ -798,7 +798,7 @@ object Dedup {
       .select(col(idCol).as("id"),
         explode(winnowFingerprints(col(textCol), k, w)).as("fp"))
     val buckets = cappedBuckets(fps, Seq(col("fp")), col("id"), bucketCap)
-    inBucketIdPairs(buckets)
+    inBucketPairs(buckets)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -1173,8 +1173,8 @@ object Dedup {
     val banded = df.select(col(idCol).as("id"),
       explode(array_distinct(charNgrams(col(strCol), n))).as("g"))
     val buckets = cappedBuckets(banded, Seq(col("g")), col("id"), bucketCap)
-    inBucketIdPairs(buckets)
-      .dropDuplicates("id_a", "id_b")
+    inBucketPairs(buckets)
+      .distinct()
       .join(strs.select(col("id").as("id_a"), col("s").as("s_a")), Seq("id_a"))
       .join(strs.select(col("id").as("id_b"), col("s").as("s_b")), Seq("id_b"))
       .filter(abs(length(col("s_a")) - length(col("s_b"))) <= maxDist)
@@ -1284,19 +1284,17 @@ object Dedup {
     cosineVerifiedPairs(buckets, vecs, minCosine)
   }
 
-  /** In-bucket ordered pair expansion over scalar-id `members` — the
-    * shared tail of every capped-bucket stage whose members are bare
-    * ids (winnow / edit-distance / embedding / semantic): each bucket's
-    * id list expands to its `id_a < id_b` pairs in one codegen'd HOF,
-    * no join. Stages whose members carry payload structs (minhash sigs,
-    * simhash words) keep their own struct-field expansion inline. */
-  private def inBucketIdPairs(buckets: DataFrame): DataFrame =
-    buckets.select(explode(expr(
-      """flatten(transform(members, m1 ->
-        |  filter(transform(members, m2 ->
-        |    if(m1 < m2, struct(m1 as id_a, m2 as id_b), null)),
-        |    p -> p is not null)))""".stripMargin)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
+  /** In-bucket ordered pair expansion, the shared tail of every
+    * capped-bucket stage: each bucket's `members` expand to their
+    * `id_a < id_b` pairs in one codegen'd call
+    * ([[org.apache.spark.sql.graftshim.InBucketPairs]]) and a plain
+    * explode, no join. Bare-id members give `(id_a, id_b)`; `(id, p…)`
+    * struct members add `p_a` and `p_b` for each payload field. */
+  private def inBucketPairs(buckets: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftshim.{InBucketPairs, Shim}
+    buckets.select(explode(Shim.toColumn(InBucketPairs(Shim.toExpression(col("members")))))
+      .as("p")).select(col("p.*"))
+  }
 
   /** The id-only-shuffle cosine verify tail shared by the
     * embedding-geometry stages ([[embeddingCandidates]],
@@ -1314,7 +1312,7 @@ object Dedup {
     import graft.functions.VectorFunctions.{dot, toDoubleArray}
     val withNorm = vecs.select(col("id"), toDoubleArray(col("v")).as("v"))
       .withColumn("__n", sqrt(dot(col("v"), col("v"))))
-    inBucketIdPairs(buckets)
+    inBucketPairs(buckets)
       .join(withNorm.select(col("id").as("id_a"), col("v").as("v_a"),
         col("__n").as("__na")), Seq("id_a"))
       .join(withNorm.select(col("id").as("id_b"), col("v").as("v_b"),

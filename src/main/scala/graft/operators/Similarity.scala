@@ -366,9 +366,11 @@ object Similarity {
           count(lit(1)).as("cnt"))
         .select(col("cell"), col("pos"),
           (col("sm").cast("double") / (col("cnt") * lit(quantScale))).as("cval"))
+      // sort_array orders the null-free structs as array_sort would, and
+      // both it and the field extraction compile
       cents = elems.groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cval")))),
-          x => x.getField("cval")).as("cv"))
+        .agg(sort_array(collect_list(struct(col("pos"), col("cval"))))
+          .getField("cval").as("cv"))
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1).toSeq
     }
@@ -386,9 +388,10 @@ object Similarity {
     * Determinism / cross-engine exactness (the [[kmeansAssign]]
     * discipline): seeds are the subvectors of the `ncode` smallest
     * vec_ids; assignment is squared-L2 via the dot expansion
-    * `(x·x − 2·x·c) + c·c` — every term a left-fold [[VectorFunctions
-    * .dot]], the exact op sequence DuckDB's `list_dot_product` runs, so
-    * distances are bit-comparable; argmin ties take the smallest code;
+    * `(x·x − 2·x·c) + c·c` — every dot a left fold (the
+    * [[org.apache.spark.sql.graftshim.PqCodes]] kernel), the exact op
+    * sequence DuckDB's `list_dot_product` runs, so distances are
+    * bit-comparable; argmin ties take the smallest code;
     * means go through quantized long sums. A codeword that loses every
     * member keeps its previous value (the oracle replays this with a
     * LEFT JOIN + COALESCE).
@@ -420,7 +423,7 @@ object Similarity {
     var books: Seq[Seq[Array[Double]]] =
       (0 until m).map(s => seeds.toSeq.map(v => v.slice(s * d, s * d + d)))
     for (_ <- 0 until iters) {
-      val parts = e.withColumn("__codes", pqCodeArray(books, d))
+      val parts = e.withColumn("__codes", pqCodeArray(books))
         .select(col("__codes"), posexplode(col("v")).as(Seq("pos", "val")))
         .withColumn("code",
           element_at(col("__codes"), (col("pos") / lit(d)).cast("int") + 1))
@@ -444,18 +447,14 @@ object Similarity {
     books
   }
 
-  /** 0-based PQ code per subspace, as one `array<int>` projection against
-    * literal codebooks — the encode step is shuffle-free. */
-  private def pqCodeArray(books: Seq[Seq[Array[Double]]], d: Int): Column = {
-    val codes = books.zipWithIndex.map { case (cb, s) =>
-      val sub = slice(col("v"), s * d + 1, d)
-      val ds = array(cb.map { cw =>
-        val lc = litVec(cw)
-        (dot(sub, sub) - lit(2.0) * dot(sub, lc)) + lit(selfDot(cw))
-      }: _*)
-      (array_position(ds, array_min(ds)) - lit(1L)).cast("int")
-    }
-    array(codes: _*)
+  /** 0-based PQ code per subspace of `v`, as one `array<int>` projection
+    * against literal codebooks — the encode step is shuffle-free. One
+    * codegen'd call ([[org.apache.spark.sql.graftshim.PqCodes]]); the
+    * squared-L2 argmin it runs is spelled in the [[pqCodebooks]] Scaladoc. */
+  private def pqCodeArray(books: Seq[Seq[Array[Double]]]): Column = {
+    import org.apache.spark.sql.graftshim.{PqCodes, Shim}
+    Shim.toColumn(PqCodes(Shim.toExpression(col("v")),
+      books.map(_.map(_.toSeq)), books.map(_.map(selfDot))))
   }
 
   /** Driver-side left-fold self-dot — the same IEEE op sequence as
@@ -473,9 +472,8 @@ object Similarity {
     * embedding. */
   def pqEncode(corpus: DataFrame, vecCol: String, idCol: String,
                books: Seq[Seq[Array[Double]]]): DataFrame = {
-    val d = books.head.head.length
     normalized(corpus, vecCol, idCol)
-      .withColumn("codes", pqCodeArray(books, d))
+      .withColumn("codes", pqCodeArray(books))
       .select(col("vec_id"), col("codes"))
   }
 
@@ -561,9 +559,8 @@ object Similarity {
                 books: Seq[Seq[Array[Double]]],
                 vecCol: String, idCol: String, queryIdCol: String,
                 k: Int): DataFrame = {
-    val d = books.head.head.length
     val r = residuals(normalized(corpus, vecCol, idCol), centroids)
-    val c = r.withColumn("codes", pqCodeArray(books, d))
+    val c = r.withColumn("codes", pqCodeArray(books))
       .select(col("vec_id"), col("cell"),
         zip_with(
           element_at(centroidMatrix(centroids), col("cell").cast("int")),

@@ -351,6 +351,21 @@ object GraftHash {
     cnt
   }
 
+  /** How many positions below the shorter length hold equal, non-null
+    * longs in both arrays — the signature-agreement count of MinHash
+    * screens. */
+  def positionalEqualCount(a: org.apache.spark.sql.catalyst.util.ArrayData,
+                           b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var cnt = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) cnt += 1
+      i += 1
+    }
+    cnt
+  }
+
   /** THE shingle-construction contract, shared by every window kernel
     * (membership, Bloom, distinct-hash collection) and parity-pinned
     * against the Column pipeline (`wordShinglesFromTokens`): fewer than
@@ -686,6 +701,57 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     val gh = GraftHash.getClass.getName.stripSuffix("$") // static forwarder
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"${ev.value} = $gh.sortedIntersectCount($a, $b);")
+  }
+}
+
+/** Codegen'd signature agreement of two `array<long>` columns
+  * ([[GraftHash.positionalEqualCount]]): the number of positions where
+  * both hold the same non-null value. Equals the interpreted
+  * `size(filter(zip_with(a, b, (x, y) -> x = y), e -> e))` it replaces
+  * (pinned in PairExprSuite): `zip_with` pads the shorter array with
+  * nulls, and a null comparison is not kept. A null array gives what
+  * `size` gives for the null `zip_with`: -1 under
+  * `spark.sql.legacy.sizeOfNull` without ANSI, else NULL. */
+case class PositionalEqualCount(left: Expression, right: Expression, legacySizeOfNull: Boolean)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  def this(left: Expression, right: Expression) =
+    this(left, right, org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = !legacySizeOfNull && (left.nullable || right.nullable)
+  override def prettyName: String = "positional_equal_count"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PositionalEqualCount =
+    copy(left = newLeft, right = newRight)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val a = left.eval(input)
+    val b = if (a == null) null else right.eval(input)
+    if (a == null || b == null) { if (legacySizeOfNull) -1 else null }
+    else GraftHash.positionalEqualCount(
+      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gh = GraftHash.getClass.getName.stripSuffix("$") // static forwarder
+    if (!legacySizeOfNull)
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $gh.positionalEqualCount($a, $b);")
+    else {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+      val (a, b) = (left.genCode(ctx), right.genCode(ctx))
+      ev.copy(code = code"""
+        |${a.code}
+        |${b.code}
+        |int ${ev.value} = -1;
+        |if (!${a.isNull} && !${b.isNull}) {
+        |  ${ev.value} = $gh.positionalEqualCount(${a.value}, ${b.value});
+        |}""".stripMargin, isNull = FalseLiteral)
+    }
   }
 }
 

@@ -95,12 +95,13 @@ object Streaming {
     * `dropDuplicatesWithinWatermark` bounds the state store to keys seen
     * within the watermark horizon — the only dedup that runs forever on
     * an unbounded feed (a plain `dropDuplicates` on a stream retains
-    * every key ever seen). Batch execution degrades to plain
-    * `dropDuplicates` — same semantics, no state. The caller must have
-    * applied `withWatermark` on a stream. */
+    * every key ever seen). Batch execution degrades to
+    * [[graft.api.DataTable.unique]], one row per key — same semantics,
+    * no state. The caller must have applied `withWatermark` on a
+    * stream. */
   def streamingDedup(events: DataFrame, keyCols: Seq[String]): DataFrame =
     if (events.isStreaming) events.dropDuplicatesWithinWatermark(keyCols)
-    else events.dropDuplicates(keyCols)
+    else graft.api.DataTable(events).unique(keyCols: _*).df
 
   /** Streaming MinHash near-dup dedup — the streaming twin of
     * `operators.Dedup.dedupByMinhash`. The signature and per-band LSH

@@ -21,4 +21,10 @@ object Shim {
     * transforms — the converter materializes the real tree.) */
   def toExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Blocks until every event posted so far has reached its listeners:
+    * `QueryExecutionListener` callbacks run on the (asynchronous)
+    * listener bus, whose drain is `private[spark]`. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

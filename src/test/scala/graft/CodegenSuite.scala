@@ -24,8 +24,12 @@ class CodegenSuite extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def wholeStageSpans(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+  /** The spans of the plan as planned, or, once `df` ran under AQE, of
+    * its final plan. */
+  private def wholeStageSpans(df: org.apache.spark.sql.DataFrame) = {
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    H.collect(df.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }
+  }
 
   test("MinHashSig projection compiles into a WholeStageCodegen span") {
     val docs = Tables.df(spark, sfDir, "documents")
@@ -270,4 +274,99 @@ class CodegenSuite extends SparkSpec {
       s"simhash48 not inside WholeStageCodegen:\n${sigOnly.queryExecution.executedPlan}")
     assert(sigOnly.limit(3).collect().length == 3)
   }
+
+  test("InBucketPairs compiles into a WholeStageCodegen span") {
+    import org.apache.spark.sql.graftshim.{InBucketPairs, Shim}
+    val docs = Tables.df(spark, sfDir, "documents")
+    val buckets = Dedup.cappedBuckets(Dedup.minhashBandRows(docs, "text", "doc_id"),
+      Seq(col("band"), col("bhash")), struct(col("id"), col("sig")), 64)
+    val out = buckets.select(explode(Shim.toColumn(InBucketPairs(Shim.toExpression(
+      col("members"))))).as("p")).select(col("p.id_a"), col("p.id_b"))
+    withCodegenOnly {
+      val rows = out.collect()
+      assert(rows.nonEmpty && rows.forall(r => r.getLong(0) < r.getLong(1)))
+    }
+    // the final adaptive plan: the span exists only once the stages ran
+    assert(wholeStageSpans(out).exists(_.toString.contains("in_bucket_pairs")),
+      s"in_bucket_pairs not inside WholeStageCodegen:\n${out.queryExecution.executedPlan}")
+  }
+
+  test("PositionalEqualCount compiles into a WholeStageCodegen span") {
+    import org.apache.spark.sql.graftshim.{PositionalEqualCount, Shim}
+    val docs = Tables.df(spark, sfDir, "documents")
+    val sigs = Dedup.withMinhashSignature(docs, "text")
+      .select(col("doc_id"), col("sig"),   // agrees on the first 12 positions
+        concat(slice(col("sig"), 1, 12), reverse(slice(col("sig"), 13, 20))).as("rev"))
+    val out = sigs.select(col("doc_id"),
+      Shim.toColumn(new PositionalEqualCount(Shim.toExpression(col("sig")),
+        Shim.toExpression(col("rev")))).as("c"))
+    // the HOF in a frame of its own: in the same projection it would
+    // pull the kernel out of codegen with it
+    val want = sigs.select(col("doc_id"),
+      size(filter(zip_with(col("sig"), col("rev"), (x, y) => x === y), e => e)).as("c"))
+    assert(wholeStageSpans(out).exists(_.toString.contains("positional_equal_count")),
+      s"positional_equal_count not inside WholeStageCodegen:\n${out.queryExecution.executedPlan}")
+    withCodegenOnly {
+      val got = out.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(got.nonEmpty && got.values.forall(_ >= 12))
+      assert(got == want.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+    }
+  }
+
+  test("PqCodes compiles into a WholeStageCodegen span") {
+    import graft.operators.Similarity
+    val emb = Tables.df(spark, sfDir, "embeddings")
+    val books = Similarity.pqCodebooks(emb, "embedding", "vec_id", dim = 64)
+    val out = Similarity.pqEncode(emb, "embedding", "vec_id", books)
+    withCodegenOnly {
+      val rows = out.collect()
+      assert(rows.nonEmpty && rows.forall(_.getSeq[Int](1).forall(c => c >= 0 && c < 8)))
+    }
+    assert(wholeStageSpans(out).exists(_.toString.contains("pq_codes")),
+      s"pq_codes not inside WholeStageCodegen:\n${out.queryExecution.executedPlan}")
+    graft.operators.GlobalOps.releaseSnapshots()
+  }
+
+  /** Plan lint: the executed plans (eager driver collects included) of
+    * each candidate, join and vector path hold no interpreted
+    * (`CodegenFallback`) expression outside an aggregate function and no
+    * `SortAggregate`. Either would split a stage and add generated
+    * classes to every pass. */
+  private def lint(name: String)(run: => Unit): Unit = {
+    val plans = graft.CodegenCensus.capture(spark)(run)
+    graft.operators.GlobalOps.releaseSnapshots()
+    assert(plans.nonEmpty, s"$name: no executed plan captured")
+    plans.foreach { p =>
+      val c = graft.CodegenCensus.of(p)
+      assert(c.fallbacks.isEmpty, s"$name: interpreted expressions ${c.fallbacks}:\n$p")
+      assert(c.sortAggregates == 0, s"$name: SortAggregate in the plan:\n$p")
+    }
+  }
+
+  test("plan lint: minhashCandidates and simhashCandidates stay compiled") {
+    val docs = Tables.df(spark, sfDir, "documents")
+    lint("minhashCandidates")(Dedup.minhashCandidates(docs, "text", "doc_id").collect())
+    lint("simhashCandidates")(Dedup.simhashCandidates(docs, "text", "doc_id").collect())
+  }
+
+  test("plan lint: jaccardSimilarityJoin stays compiled") {
+    val docs = Tables.df(spark, sfDir, "documents")
+    lint("jaccardSimilarityJoin")(Dedup.jaccardSimilarityJoin(docs, "text", "doc_id").collect())
+  }
+
+  test("plan lint: pqCodebooks/pqEncode and bruteForceTopK stay compiled") {
+    import graft.operators.Similarity
+    val emb = Tables.df(spark, sfDir, "embeddings")
+    lint("pqCodebooks/pqEncode") {
+      val books = Similarity.pqCodebooks(emb, "embedding", "vec_id", dim = 64)
+      Similarity.pqEncode(emb, "embedding", "vec_id", books).collect()
+    }
+    lint("bruteForceTopK")(Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") === 0),
+      "embedding", "vec_id", "vec_id", k = 10).collect())
+  }
+
+  /** CODEGEN_ONLY: a Janino failure is an error, not a silent fallback. */
+  private def withCodegenOnly(f: => Unit): Unit =
+    withSQLConf("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(f)
 }

@@ -113,15 +113,4 @@ class MinHashExprSuite extends SparkSpec {
       assert(in.select(kernel("a", "b")).collect().forall(_.isNullAt(0)))
     }
   }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
 }

@@ -50,6 +50,18 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   def rowCount(df: DataFrame): Long = df.count()
+
+  /** Runs `f` with the given session confs set, then restores them. */
+  def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
+    val conf = spark.conf
+    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally olds.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

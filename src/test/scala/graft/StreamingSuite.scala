@@ -397,6 +397,17 @@ class StreamingSuite extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  test("streamingDedup on a batch frame: one row per key, survives exceptAll with itself") {
+    // the batch path ran dropDuplicates(keys), whose result made
+    // x.exceptAll(x) fail on Spark 4.1.2 (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+    import spark.implicits._
+    val events = Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c")).toDF("user_id", "v")
+    val d = Streaming.streamingDedup(events, Seq("user_id"))
+    assert(d.columns.toSeq == Seq("user_id", "v"))
+    assert(d.select("user_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(d.exceptAll(d).count() == 0)
+  }
+
   test("streamingDedup drops duplicate keys within the watermark") {
     val inDir = "/tmp/graft_stream_events"
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.api.toDf
 import graft.functions.VectorFunctions
@@ -93,5 +95,45 @@ class VecExprSuite extends SparkSpec {
     val unfused = df.select(col("id"), VectorFunctions.cosineUnfused(col("a"), col("b")))
       .orderBy("id").collect().map(_.getDouble(1)).toSeq
     assert(fused == unfused) // exact ==, not almostEqual
+  }
+
+  test("PqCodes equals the built-in argmin spelling on both paths, incl. ties, ragged, null and NaN rows") {
+    import org.apache.spark.sql.graftshim.{PqCodes, Shim}
+    import VectorFunctions.{dot, litVec}
+    val rnd = new scala.util.Random(7)
+    def vec(n: Int) = Seq.fill(n)(java.lang.Double.valueOf(rnd.nextGaussian()))
+    val c1 = Array(0.5, -0.25, 1.0, 0.0)
+    // subspace 0 repeats a codeword, so a tie takes the first position
+    val books = Seq(Seq(Array(1.0, 0.0, -1.0, 2.0), c1, c1.clone()), Seq.fill(3)(vec(4).map(_.doubleValue).toArray))
+    val rows = Seq.tabulate(12)(i => (i, Option(vec(8)))) ++ Seq(
+      (20, None),                                                   // null vector
+      (21, Some(vec(6))), (22, Some(vec(3))), (23, Some(Seq())),    // short slices
+      (24, Some(Seq[java.lang.Double](0.5, null, 1.0, 0.0) ++ vec(4))),  // null element
+      (25, Some(vec(5) ++ Seq[java.lang.Double](Double.NaN, 1.0, 2.0))),
+      (26, Some(Seq[java.lang.Double](Double.PositiveInfinity, 0.0, 0.0, 0.0) ++ vec(4))),
+      (27, Some(c1.toSeq.map(java.lang.Double.valueOf) ++ vec(4))), // on the repeated codeword
+      (28, Some(Seq.fill(8)(java.lang.Double.valueOf(-0.0)))))
+    val df = spark.createDataFrame(rows.map { case (i, v) => (i, v.map(_.map(_.asInstanceOf[Any]))) }
+      .map { case (i, v) => org.apache.spark.sql.Row(i, v.orNull) }.asJava,
+      org.apache.spark.sql.types.StructType.fromDDL("i int, v array<double>"))
+    def selfDot(a: Array[Double]) = a.foldLeft(0.0)((s, x) => s + x * x)
+    val d = 4
+    val builtIn = array(books.zipWithIndex.map { case (cb, s) =>
+      val sub = slice(col("v"), s * d + 1, d)
+      val ds = array(cb.map(cw => (dot(sub, sub) - lit(2.0) * dot(sub, litVec(cw))) + lit(selfDot(cw))): _*)
+      (array_position(ds, array_min(ds)) - lit(1L)).cast("int")
+    }: _*)
+    val kernel = Shim.toColumn(PqCodes(Shim.toExpression(col("v")),
+      books.map(_.map(_.toSeq)), books.map(_.map(selfDot))))
+    def check(in: org.apache.spark.sql.DataFrame): Unit = {
+      val got = in.select(col("i"), kernel.as("k"), builtIn.as("b")).collect()
+      assert(got.length == rows.length)
+      got.foreach(r => assert(r.getSeq[Any](1) == r.getSeq[Any](2), s"row ${r.getInt(0)}: $r"))
+      val byId = got.map(r => r.getInt(0) -> r.getSeq[Any](1)).toMap
+      assert(byId(27).head == 1 && byId(20) == Seq(null, null) && byId(23) == Seq(null, null))
+    }
+    check(df.repartition(3))
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check(df))
   }
 }

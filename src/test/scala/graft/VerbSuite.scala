@@ -607,6 +607,22 @@ class VerbSuite extends SparkSpec {
     assert(colLongs(byCols, "id") == Seq(1L, 2L, 4L, 5L))
   }
 
+  test("unique(cols) keeps the input column order and survives exceptAll with itself") {
+    // dropDuplicates(cols) made x.exceptAll(x) fail on Spark 4.1.2 with
+    // INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+    val df = toDf(spark)(
+      "k" -> Seq(1, 1, 2, 3, 3),
+      "v" -> Seq("a", "a", "b", "c", "d"),
+      "w" -> Seq(1.0, 1.0, 2.0, 3.0, 4.0))
+    val u = df.unique("k")
+    assert(u.df.columns.toSeq == Seq("k", "v", "w"))
+    assert(colLongs(u.arrange("k"), "k") == Seq(1L, 2L, 3L))
+    assert(u.df.exceptAll(u.df).count() == 0)
+    // every row of the result is a row of the input
+    assert(u.df.exceptAll(df.df).count() == 0)
+    assert(df.unique("k", "v").df.count() == 4)
+  }
+
   // ------------------------------------------------------------ reshape
 
   test("gather 2 columns (testDf.nim:988-1010 'Gather - 2 columns')") {
