@@ -156,7 +156,8 @@ private[graft] object QueriesWindows {
     // number from the two-pass counts + the SQL remainder rule as exact
     // IntegralDivide arithmetic. The order must be UNIQUE (enforced
     // loudly from the pass-1 stats) — (price, ok, ln) is, at all scales.
-    // First key double → the split-point bucket tier (nothing persists).
+    // Any key type buckets through the one split-point stamp; nothing
+    // persists.
     "q_ntile_global" -> ((s: SparkSession, dir: String) =>
       graft.api.DataTable(
         graft.operators.GlobalRank.withGlobalNtile(
@@ -173,8 +174,7 @@ private[graft] object QueriesWindows {
     // the two-pass GlobalCumSum decomposition itself, hash-checked
     // directly (previously only exercised compositely through
     // q_systematic_resample). LONG cents (the house float rule) over
-    // the unique (orderkey, linenumber) order — long first key → the
-    // split-point bucket tier, nothing persists.
+    // the unique (orderkey, linenumber) order; nothing persists.
     "q_global_cumsum" -> ((s: SparkSession, dir: String) =>
       graft.api.DataTable(
         graft.operators.GlobalCumSum.withGlobalCumSum(

@@ -1342,7 +1342,9 @@ object Dedup {
     * (path-like) graph still converges in O(log n) rounds total instead
     * of O(diameter), without taxing the shallow common case with the
     * extra join. Convergence is detected by an exact changed-label count
-    * read off the cached per-round output; logical lineage is truncated
+    * read off the cached per-round output; a graph still changing after
+    * `maxIter` rounds throws, since its labels are only an upper bound
+    * on the components. Logical lineage is truncated
     * per round (persist alone leaves the plan tree doubling per round) so
     * plans stay O(1) deep regardless of round count.
     *
@@ -1365,6 +1367,7 @@ object Dedup {
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): (DataFrame, Int) = {
+    require(maxIter >= 1, s"connectedComponents: maxIter=$maxIter must be >= 1")
     import org.apache.spark.storage.StorageLevel
     val half = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
@@ -1386,55 +1389,55 @@ object Dedup {
       if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
     // seed with one free propagation round: label_0 = min(id, neighbors)
     // (one aggregation over the cached edges, no join, no change-count).
-    var labels = truncate(edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("__m"))
-      .select(col("src").as("id"),
-        least(col("src"), col("__m")).as("component")))
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val viaNeighbor = edges
-        .join(labels.select(col("id").as("dst"), col("component")), Seq("dst"))
-        .select(col("src").as("id"), col("component"))
-      // The previous label rides through the min-aggregation as a tagged
-      // column (labels contribute exactly one non-null `__old` per id, so
-      // `min` recovers it) — the convergence check then reads the cached
-      // aggregation output directly instead of a second co-partitioned
-      // self-join per round.
-      val propagated = viaNeighbor
-        .select(col("id"), col("component"), lit(null).cast("long").as("__old"))
-        .union(labels.select(col("id"), col("component"), col("component").as("__old")))
-        .groupBy("id")
-        .agg(min("component").as("component"), min("__old").as("__old"))
-      // pointer jumping (label compression): component := label(component).
-      // Every component value is itself a node id, so the lookup is a join
-      // against the same label set; label(m) <= m, so this only tightens.
-      // Doubles effective hop distance per round -> deep graphs converge in
-      // O(log n) rounds; skipped for the first rounds so shallow graphs
-      // (the near-dup norm) never pay the extra join.
-      var jumpSrc: DataFrame = null
-      val next = truncate(if (iter < CompressAfter) propagated
-        else {
-          jumpSrc = propagated.persist(StorageLevel.MEMORY_AND_DISK)
-          jumpSrc
-            .join(jumpSrc.select(col("id").as("__cid"), col("component").as("__cc")),
-              col("component") === col("__cid"), "left")
-            .select(col("id"),
-              coalesce(col("__cc"), col("component")).as("component"), col("__old"))
-        })
-      changed = next.filter(col("component") =!= col("__old")).count()
-      if (jumpSrc != null) jumpSrc.unpersist()
-      labels = next
-      iter += 1
-    }
-    labels = labels.drop("__old")
-    if (changed > 0)
-      System.err.println(
-        s"[graft] connectedComponents: not converged after $maxIter rounds " +
-          s"($changed labels still changing) — results are an upper bound; " +
-          "raise maxIter for graphs with diameter > maxIter")
-    edges.unpersist()
-    (labels, iter)
+    try {
+      var labels = truncate(edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("__m"))
+        .select(col("src").as("id"),
+          least(col("src"), col("__m")).as("component")))
+      var iter = 0
+      var changed = 1L
+      while (changed > 0 && iter < maxIter) {
+        val viaNeighbor = edges
+          .join(labels.select(col("id").as("dst"), col("component")), Seq("dst"))
+          .select(col("src").as("id"), col("component"))
+        // The previous label rides through the min-aggregation as a tagged
+        // column (labels contribute exactly one non-null `__old` per id, so
+        // `min` recovers it) — the convergence check then reads the cached
+        // aggregation output directly instead of a second co-partitioned
+        // self-join per round.
+        val propagated = viaNeighbor
+          .select(col("id"), col("component"), lit(null).cast("long").as("__old"))
+          .union(labels.select(col("id"), col("component"), col("component").as("__old")))
+          .groupBy("id")
+          .agg(min("component").as("component"), min("__old").as("__old"))
+        // pointer jumping (label compression): component := label(component).
+        // Every component value is itself a node id, so the lookup is a join
+        // against the same label set; label(m) <= m, so this only tightens.
+        // Doubles effective hop distance per round -> deep graphs converge in
+        // O(log n) rounds; skipped for the first rounds so shallow graphs
+        // (the near-dup norm) never pay the extra join.
+        var jumpSrc: DataFrame = null
+        val next = truncate(if (iter < CompressAfter) propagated
+          else {
+            jumpSrc = propagated.persist(StorageLevel.MEMORY_AND_DISK)
+            jumpSrc
+              .join(jumpSrc.select(col("id").as("__cid"), col("component").as("__cc")),
+                col("component") === col("__cid"), "left")
+              .select(col("id"),
+                coalesce(col("__cc"), col("component")).as("component"), col("__old"))
+          })
+        changed = next.filter(col("component") =!= col("__old")).count()
+        if (jumpSrc != null) jumpSrc.unpersist()
+        labels = next
+        iter += 1
+      }
+      // labels that still change are only an upper bound on the components
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"connectedComponents: not converged after $iter rounds ($changed " +
+            "labels still changing) — raise maxIter for graphs with diameter > maxIter")
+      (labels.drop("__old"), iter)
+    } finally edges.unpersist()
   }
 
   /** Shared cluster-label step: components over an (id_a, id_b) pair

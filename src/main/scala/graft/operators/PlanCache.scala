@@ -7,11 +7,11 @@ import org.apache.spark.storage.StorageLevel
   * guide-§5 trade ("caching is only worth it when a DataFrame is reused
   * AND recomputing it is more expensive than the memory pressure"):
   * Catalyst performs no common-subtree elimination across DataFrame
-  * branches, so e.g. [[Dedup.jaccardSimilarityJoin]]'s shingle-set frame
-  * was scanned SIX times per execution, each scan re-running the
-  * md5-per-shingle kernel (and the pushed size/notNull filters evaluated
-  * it twice more inside each scan). Pinning the shared frame turns that
-  * into one kernel pass plus cache reads.
+  * branches or jobs, so e.g. k-means training (`Similarity.lloyd`) scans
+  * its normalized vector image once for the seeds and once per Lloyd
+  * round, each scan re-reading the parquet and re-running the
+  * `toDoubleArray` projection. Pinning the shared frame turns that into
+  * one projection pass plus cache reads.
   *
   * Values are unchanged — the pinned frame is deterministic, and a lost
   * block simply recomputes. Harnesses release every pin between queries

@@ -2,13 +2,19 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.expressions.WindowSpec
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.DoubleType
+import scala.util.DynamicVariable
 
-/** Split-point range bucketing shared by the two-pass global operators
-  * ([[GlobalRank]], [[GlobalShift]], [[GlobalCumSum]]).
+/** The two-pass prefix scan of the global operators ([[GlobalRank]],
+  * [[GlobalShift]], [[GlobalCumSum]]) and its split-point range bucketing.
+  *
+  * [[prefixScan]] is every operator's preamble and pass 1; the returned
+  * [[Scan]] gives its pass 2 the shared window, the prefix offsets behind
+  * one misalignment guard, and the closing drop. An operator supplies only
+  * its per-bucket partials and its pass-2 columns.
   *
   * [[stamp]] samples the FULL order tuple once, keeps up to numParts − 1
   * boundary tuples as literals of each key's own Catalyst type, and
@@ -98,18 +104,103 @@ private[graft] object RangeBuckets {
       bounds.toIndexedSeq
     }
 
-  /** Exclusive prefix sums of per-bucket pass-1 totals, as a scan-local
-    * lookup by `__pid`. A bucket with no pass-1 entry means the input is
-    * not deterministic upstream (pass 2 saw rows pass 1 did not), so the
-    * lookup raises instead of returning a silently wrong null. */
-  def prefixOffset(op: String, perBucket: Seq[(Int, Long)]): Column = {
-    val byPid = perBucket.sortBy(_._1)
-    val offsets = byPid.map(_._1).zip(byPid.scanLeft(0L)(_ + _._2)).toMap
-    val raw = element_at(typedLit(offsets), col("__pid"))
-    when(raw.isNull, raise_error(concat(
-      lit(s"$op: bucket misalignment between pass 1 and pass 2 (input not " +
-        "deterministic upstream), pid="), col("__pid").cast("string"))))
-      .otherwise(raw)
+  /** Test seam, identity in production: distorts only the misalignment
+    * guard's view of the pass-1 row counts, so a suite can simulate a
+    * pass-1/pass-2 bucket mismatch (what an input that is not
+    * deterministic upstream looks like) through any operator. */
+  private[graft] val tamperCountsForTest =
+    new DynamicVariable[Map[Int, Long] => Map[Int, Long]](identity)
+
+  /** Pass 1 of a two-pass prefix scan, collected, and the stamped frame
+    * pass 2 runs over. `buckets` holds one row per non-empty bucket:
+    * `__pid` (int), `__n` (its row count, long), then the operator's
+    * partials by name. */
+  final class Scan private[RangeBuckets] (op: String, val parted: DataFrame,
+      val buckets: Seq[Row], val okCols: Seq[Column], internal: Seq[String]) {
+    val rows: Long = buckets.map(_.getLong(1)).sum
+    private val counts = tamperCountsForTest.value(
+      buckets.map(r => r.getInt(0) -> r.getLong(1)).toMap)
+
+    /** The one pass-2 window. Every window function of an operator uses
+      * it, so pass 2 sorts each bucket once, and the guard's recount
+      * shares the Window operator of the value it guards. */
+    val w: WindowSpec = Window.partitionBy("__pid").orderBy(okCols: _*)
+
+    /** Sum of a long partial over all buckets. */
+    def total(field: String): Long = buckets.map(_.getAs[Long](field)).sum
+
+    /** Exclusive prefix sum of a long partial (`__n` for row offsets),
+      * looked up by the row's `__pid` behind the misalignment guard. */
+    def offset(field: String): Column =
+      if (rows == 0L) lit(null).cast("long")
+      else {
+        val byPid = buckets.map(r => r.getInt(0) -> r.getAs[Long](field)).sortBy(_._1)
+        val offsets = byPid.map(_._1).zip(byPid.scanLeft(0L)(_ + _._2)).toMap
+        guard(element_at(typedLit(offsets), col("__pid")))
+      }
+
+    /** `value`, or a failure when pass 2 does not see pass 1's buckets:
+      * the row's bucket must be known to pass 1 and hold pass 1's row
+      * count. `__pid` is a pure projection, so only an input that is not
+      * deterministic upstream trips it. The recount is a whole-bucket
+      * frame of the shared window, so it adds no operator. */
+    def guard(value: Column): Column =
+      if (rows == 0L) value
+      else {
+        val known = element_at(typedLit(counts), col("__pid"))
+        val recount = count(lit(1)).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        when(known.isNull || known =!= recount, raise_error(concat(
+          lit(s"$op: bucket misalignment between pass 1 and pass 2 (input " +
+            "not deterministic upstream), pid="), col("__pid").cast("string"),
+          lit(" pass1="), coalesce(known.cast("string"), lit("absent")),
+          lit(" pass2="), recount.cast("string")))).otherwise(value)
+      }
+
+    /** Pass 2's result without the internal columns. On empty input the
+      * plan is filtered to nothing, which Spark prunes to an empty
+      * relation with the output schema. */
+    def finish(out: DataFrame): DataFrame =
+      (if (rows == 0L) out.filter(lit(false)) else out).drop(internal: _*)
+  }
+
+  /** The preamble and pass 1 of every global prefix scan ([[GlobalRank]],
+    * [[GlobalCumSum]], [[GlobalShift]]). Refuses reserved names up front:
+    * `withColumn` would overwrite an input column named like an internal
+    * one and the final drop would erase it, and an output named so would
+    * be erased the same way. Projects the order keys as `__ok<i>` and
+    * `inputs` under their names, stamps `__pid`, then aggregates per
+    * bucket its row count plus `partials(okCols)` in one job, collected
+    * to the driver: one small row per bucket, bounded by the shuffle
+    * partition count, never by data. `scratch` names the columns the
+    * operator's pass 2 adds and [[Scan.finish]] drops. */
+  def prefixScan(op: String, df: DataFrame, order: Seq[Column], outputs: Seq[String],
+                 inputs: Seq[(String, Column)] = Nil, scratch: Seq[String] = Nil)(
+                 partials: Seq[Column] => Seq[Column]): Scan = {
+    require(order.nonEmpty, s"$op: need at least one order column")
+    val okNames = order.indices.map(i => s"__ok$i")
+    val internal = okNames ++ inputs.map(_._1) ++ scratch :+ "__pid"
+    val clash = df.columns.filter(internal.contains)
+    require(clash.isEmpty, s"$op: input columns ${clash.mkString(", ")} " +
+      s"collide with reserved internal names (${internal.mkString(", ")}) — rename them first")
+    require(outputs.distinct.size == outputs.size, s"$op: duplicate output names in $outputs")
+    outputs.foreach { o =>
+      require(!internal.contains(o),
+        s"$op: output name '$o' collides with a reserved internal name — pick another")
+      require(!df.columns.contains(o), s"$op: output column '$o' already exists")
+    }
+    val keyed = (order.zip(okNames).map(_.swap) ++ inputs).foldLeft(df) {
+      case (d, (n, c)) => d.withColumn(n, c)
+    }
+    val okCols = okNames.map(col)
+    val parted = stamp(keyed, okNames, df.sparkSession.sessionState.conf.numShufflePartitions)
+    val buckets = parted.groupBy("__pid")
+      .agg(count(lit(1)).as("__n"), partials(okCols): _*).collect().toSeq
+    // pass 2's rank, dense_rank and row_number are ints
+    buckets.foreach(r => require(r.getLong(1) <= Int.MaxValue,
+      s"$op: range bucket ${r.getInt(0)} holds ${r.getLong(1)} rows — pass 2's " +
+        "int window functions wrap past Int.MaxValue; raise spark.sql.shuffle.partitions"))
+    new Scan(op, parted, buckets, okCols, internal)
   }
 
   /** `value`, or a failure naming the tuple on a row whose order tuple

@@ -40,6 +40,22 @@ class ClusterSuite extends SparkSpec {
     assert(rounds <= 16, s"path-$n took $rounds rounds — compression not engaging")
   }
 
+  test("non-convergence within maxIter fails loudly, naming rounds and changed labels") {
+    // a 128-node path needs more than two rounds even with pointer
+    // jumping: labels after two rounds are only an upper bound, so the
+    // call must refuse to return them
+    val n = 128
+    val pairs = toDf(spark)(
+      "id_a" -> (0 until n - 1),
+      "id_b" -> (1 until n)).df
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponentsWithRounds(pairs, "id_a", "id_b", maxIter = 2)
+    }
+    assert(e.getMessage.contains("not converged after 2 rounds"), e.getMessage)
+    assert("""\(\d+ labels still changing\)""".r.findFirstIn(e.getMessage).isDefined,
+      e.getMessage)
+  }
+
   test("reliable-checkpoint branch (checkpoint dir set) yields identical labels") {
     // exercises the fault-tolerant truncation path: with a checkpoint dir
     // configured, rounds go through reliable checkpoint() instead of

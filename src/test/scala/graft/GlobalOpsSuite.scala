@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{GlobalCumSum, GlobalOps, GlobalRank, GlobalShift, PlanCache}
+import graft.operators.{GlobalCumSum, GlobalOps, GlobalRank, GlobalShift, PlanCache, RangeBuckets}
 
 /** The three two-pass global operators over every orderable key type:
   * each must equal the naive single-partition window, persist nothing,
@@ -78,6 +78,35 @@ class GlobalOpsSuite extends SparkSpec {
         val plan = out.queryExecution.executedPlan.toString
         assert(!plan.contains("InMemoryTableScan"), s"$name:\n$plan")
       }
+    }
+  }
+
+  test("one misalignment guard: every operator fails loudly when pass 2 disagrees with pass 1") {
+    // the skeleton's count seam makes the guard believe pass 1 saw other
+    // buckets than pass 2 has — what an input that is not deterministic
+    // upstream looks like
+    val df = keyed(h)
+    val ops: Seq[(String, () => DataFrame, String)] = Seq(
+      ("rank", () => GlobalRank.withGlobalRanks(df, Seq(col("k"))), "rnk"),
+      ("ntile", () => GlobalRank.withGlobalNtile(df, 7, Seq(col("k"), col("rid"))), "bucket"),
+      ("cumsum", () => GlobalCumSum.withGlobalCumSum(df, col("w"), Seq(col("k"))), "cum"),
+      ("shift", () => GlobalShift.withGlobalLag(df, "prev", col("v"), 1,
+        Seq(col("k"), col("rid")), default = -1L), "prev"))
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val tampers: Seq[(String, Map[Int, Long] => Map[Int, Long])] = Seq(
+      "count off by one" -> (_.map { case (p, n) => p -> (n + 1) }),
+      "bucket unknown to pass 1" -> (m => m - m.keys.max))
+    ops.foreach { case (name, op, out) =>
+      tampers.foreach { case (how, tamper) =>
+        val bad = RangeBuckets.tamperCountsForTest.withValue(tamper)(op())
+        val e = scala.util.Try(bad.select(out).collect()).failed.toOption
+        assert(e.exists(messages(_).exists(_.contains("misalignment"))), s"$name, $how: $e")
+      }
+      // untampered, the same build runs clean: no false trips
+      val got = op().select(out).collect()
+      assert(got.length == 400 && got.forall(!_.isNullAt(0)), name)
     }
   }
 

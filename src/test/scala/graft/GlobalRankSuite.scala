@@ -212,6 +212,22 @@ class GlobalRankSuite extends SparkSpec {
     assert(analyzed.contains("misalignment"), s"guard missing:\n$analyzed")
   }
 
+  test("input columns colliding with reserved internal names refuse up front") {
+    // withColumn would overwrite such a column and the closing drop
+    // would erase it: both entry points refuse before any job runs
+    Seq("__pid", "__ok0").foreach { reserved =>
+      val bad = uniq.withColumn(reserved, lit(7))
+      val e = intercept[IllegalArgumentException] {
+        GlobalRank.withGlobalRanks(bad, Seq(col("v")))
+      }
+      assert(e.getMessage.contains(reserved), e.getMessage)
+      val e2 = intercept[IllegalArgumentException] {
+        GlobalRank.withGlobalNtile(bad, 4, Seq(col("v")), "t")
+      }
+      assert(e2.getMessage.contains(reserved), e2.getMessage)
+    }
+  }
+
   test("withGlobalNtile: SQL remainder rule, parity with the naive window") {
     // N=1000, b=7: q=142, r=6 — six buckets of 143, one of 142
     val got = GlobalRank.withGlobalNtile(uniq, 7, Seq(col("v")), "t")
